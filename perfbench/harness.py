@@ -46,14 +46,14 @@ class Tracer:
 
     A span has a name, a layer, a trace id shared by every span of one
     micro-batch or query, a parent, and wall-clock start/end in epoch ms.
-    When disabled, ``span`` costs one ``if`` and records nothing.
+    The benchmark never opens a span inside another, so every parent is
+    None and a span's self time is its whole duration.  When disabled,
+    ``span`` costs one ``if`` and records nothing.
     """
 
     def __init__(self, enabled: bool):
         self.enabled = enabled
         self.spans: list[dict] = []
-        self._local = threading.local()
-        self._lock = threading.Lock()
         self.self_ms = 0.0
 
     @contextmanager
@@ -62,45 +62,23 @@ class Tracer:
             yield None
             return
         t_in = time.perf_counter()
-        stack = getattr(self._local, "stack", None)
-        if stack is None:
-            stack = self._local.stack = []
-        rec = {
-            "name": name,
-            "layer": layer,
-            "trace_id": trace_id,
-            "parent": stack[-1]["id"] if stack else None,
-            "start_ms": now_ms(),
-        }
-        stack.append(rec)
-        with self._lock:
-            rec["id"] = len(self.spans)
-            self.spans.append(rec)
-            self.self_ms += (time.perf_counter() - t_in) * 1000.0
+        rec = {"id": len(self.spans), "name": name, "layer": layer, "trace_id": trace_id,
+               "parent": None, "start_ms": now_ms()}
+        self.spans.append(rec)
+        self.self_ms += (time.perf_counter() - t_in) * 1000.0
         try:
             yield rec
         finally:
             t_out = time.perf_counter()
             rec["end_ms"] = now_ms()
-            stack.pop()
-            with self._lock:
-                self.self_ms += (time.perf_counter() - t_out) * 1000.0
+            self.self_ms += (time.perf_counter() - t_out) * 1000.0
 
     def self_times(self) -> dict[str, float]:
-        """Per layer: total span time minus the part covered by child spans."""
-        children: dict[int, list[dict]] = {}
-        for s in self.spans:
-            if s["parent"] is not None:
-                children.setdefault(s["parent"], []).append(s)
+        """Per layer: the summed duration of its spans."""
         out: dict[str, float] = {}
         for s in self.spans:
-            if "end_ms" not in s:
-                continue
-            covered = union_ms(
-                [(c["start_ms"], c.get("end_ms", c["start_ms"])) for c in children.get(s["id"], [])]
-            )
-            own = (s["end_ms"] - s["start_ms"]) - covered
-            out[s["layer"]] = out.get(s["layer"], 0.0) + max(own, 0.0)
+            if "end_ms" in s:
+                out[s["layer"]] = out.get(s["layer"], 0.0) + s["end_ms"] - s["start_ms"]
         return out
 
 
@@ -148,9 +126,10 @@ def _cmdline(pid: int) -> bytes:
 def tree_hwm_bytes(root: int, exclude: set[int]) -> dict[int, int]:
     """pid -> peak resident set (VmHWM) for every process in the tree.
 
-    A child that still runs its parent's program is skipped: the JVM spawns
-    helpers through vfork, and until they exec they report the parent's
-    memory as their own."""
+    A child of the JVM that still runs the JVM's own command line is
+    skipped: the JVM spawns helpers through vfork, and until they exec they
+    report the JVM's memory as their own.  Forked children of any other
+    process, such as the workers ``pyspark.daemon`` forks, are counted."""
     kids = _children_map()
     out, todo = {}, [(root, None)]
     while todo:
@@ -159,7 +138,7 @@ def tree_hwm_bytes(root: int, exclude: set[int]) -> dict[int, int]:
             continue
         try:
             cmd = _cmdline(pid)
-            if cmd != parent_cmd:
+            if not (cmd == parent_cmd and _is_java(cmd)):
                 with open(f"/proc/{pid}/status") as f:
                     for line in f:
                         if line.startswith("VmHWM:"):
@@ -169,6 +148,10 @@ def tree_hwm_bytes(root: int, exclude: set[int]) -> dict[int, int]:
             continue
         todo.extend((k, cmd) for k in kids.get(pid, []))
     return out
+
+
+def _is_java(cmdline: bytes) -> bool:
+    return os.path.basename(cmdline.split(b"\0", 1)[0]) == b"java"
 
 
 class Sampler(threading.Thread):

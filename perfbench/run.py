@@ -99,12 +99,8 @@ def _start_spark(ctx: Ctx):
             app_name="perfbench",
             extra_conf={
                 "spark.local.dir": ctx.path("local"),
-                # heap sized and touched up front, so neither peak RSS nor
-                # page faults on the timed path depend on when the collector
-                # chose to grow it
                 "spark.driver.extraJavaOptions": (
-                    f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch -Djava.io.tmpdir={ctx.path('tmp')}"
-                    f" -Dderby.system.home={ctx.path('tmp')}"
+                    f"-Djava.io.tmpdir={ctx.path('tmp')} -Dderby.system.home={ctx.path('tmp')}"
                 ),
                 "spark.sql.warehouse.dir": ctx.path("warehouse"),
                 "spark.ui.showConsoleProgress": "false",
