@@ -7,7 +7,9 @@ so Catalyst gets predicate pushdown + column pruning for free; callers must
 
 from __future__ import annotations
 
+import logging
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +35,10 @@ ALWAYS_BROADCAST = ("region", "nation")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+_log = logging.getLogger(__name__)
+# exception class name -> times ensure_parallelism swallowed it
+PARALLELISM_GUARD_FAILURES: Counter[str] = Counter()
+
 
 def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Adaptive parallelism guard for operators whose per-row work is
@@ -57,7 +63,12 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     A ``BroadcastExchange`` does NOT count (r14 advice): a
     broadcast-join plan keeps the probe side's scan partitioning, so
     it still needs the round-robin; materializing its build stage via
-    ``df.rdd`` is bounded by the broadcast size cap by construction."""
+    ``df.rdd`` is bounded by the broadcast size cap by construction.
+
+    The guard is best-effort: a failure while inspecting the plan
+    returns ``df`` unchanged, counts the exception class in
+    ``PARALLELISM_GUARD_FAILURES`` and logs a warning the first time
+    that class is seen."""
     try:
         if df.isStreaming:
             return df
@@ -71,8 +82,13 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
         target = min_parts or df.sparkSession.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < target:
             return df.repartition(target)
-    except Exception:  # noqa: BLE001 — guard is best-effort
-        pass
+    except Exception as e:  # noqa: BLE001 — guard is best-effort
+        name = type(e).__name__
+        PARALLELISM_GUARD_FAILURES[name] += 1
+        if PARALLELISM_GUARD_FAILURES[name] == 1:
+            _log.warning(
+                "ensure_parallelism left the plan as is: %r", e, exc_info=True
+            )
     return df
 
 

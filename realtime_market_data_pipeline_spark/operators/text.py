@@ -1,10 +1,13 @@
 """Text-analysis operators for large-scale training-data pipelines:
 tokenization, quality scoring, language ID, document fingerprinting.
 
-All hot-path logic is built-in Column expressions (split/transform/aggregate/
-md5) — no Python UDFs — so the operators stay inside whole-stage codegen and
-scale linearly with partitions. Each has an exact ANSI-SQL twin used as its
-DuckDB oracle (realtime_market_data_pipeline_spark.queries).
+Hot-path logic is built-in Column expressions (split/transform/aggregate/
+md5), so the operators stay inside whole-stage codegen and scale linearly
+with partitions. The exception is ``gopher_repetition``: its n-gram counts
+come from one row-local pickled Python UDF (``repetition_counts``), so
+Python workers must be able to import this package. Each operator has an
+exact ANSI-SQL twin used as its DuckDB oracle
+(realtime_market_data_pipeline_spark.queries).
 
 The heuristics are deliberately simple, deterministic functions of the text
 (marker-word counts, ratios); on a real corpus you would swap the marker
@@ -12,6 +15,10 @@ lists / thresholds, not the dataflow.
 """
 
 from __future__ import annotations
+
+import re
+from collections import Counter
+from hashlib import md5
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -230,6 +237,62 @@ GOPHER_REPETITION_THRESHOLDS = {
 }
 
 
+# Java's \s (Spark's split regex dialect): ASCII whitespace only, so NBSP
+# and the other Unicode spaces stay inside tokens exactly as in Spark
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+REPETITION_COUNT_FIELDS = (
+    "n_toks",
+    "line_n", "line_distinct", "line_chars", "line_distinct_chars",
+    "para_n", "para_distinct", "para_chars", "para_distinct_chars",
+    *(f"top{n}_cov" for n in (2, 3, 4)),
+    *(f"dup{n}_cov" for n in range(5, 11)),
+)
+
+
+def repetition_counts(text: str | None) -> tuple[int, ...] | None:
+    """Exact integer counts behind every Gopher repetition signal of one
+    document, in ``REPETITION_COUNT_FIELDS`` order (None for NULL text).
+
+    Tokens are Spark's ``split(text, '\\s+')``; lines and paragraphs
+    split on '\\n' and '\\n\\n' (empty pieces kept, like Spark's split).
+    ``top{n}_cov`` is the interval-union token coverage of the most
+    frequent n-gram when it occurs >= 2 times, ties to the largest md5
+    hex digest of the space-joined gram; ``dup{n}_cov`` covers every
+    n-gram occurring >= 2 times. A repeated n-gram contains a repeated
+    (n-1)-gram, so once an n has no repeats every larger n is 0."""
+    if text is None:
+        return None
+    toks = _JAVA_WS.split(text)
+    out = [len(toks)]
+    for segs in (text.split("\n"), text.split("\n\n")):
+        distinct = set(segs)
+        out += [len(segs), len(distinct),
+                sum(map(len, segs)), sum(map(len, distinct))]
+    for n in range(2, 11):
+        grams = list(zip(*(toks[k:] for k in range(n))))
+        counts = Counter(grams)
+        top = max(counts.values(), default=0)
+        if top < 2:
+            out += [0] * (11 - n)
+            break
+        if n <= 4:
+            best = max(
+                (g for g, c in counts.items() if c == top),
+                key=lambda g: md5(" ".join(g).encode()).hexdigest(),
+            )
+            starts = (i for i, g in enumerate(grams) if g == best)
+        else:
+            starts = (i for i, g in enumerate(grams) if counts[g] >= 2)
+        # ascending starts of equal-length intervals: each adds what
+        # sticks out past the previous end
+        cov = end = 0
+        for i in starts:
+            cov += i + n - max(i, end)
+            end = i + n
+        out.append(cov)
+    return tuple(out)
+
+
 def gopher_repetition(
     df: DataFrame,
     text_col: str = "text",
@@ -247,8 +310,7 @@ def gopher_repetition(
       first, over the line/paragraph count) <= 0.30 each;
     - duplicate line / paragraph CHARACTER fraction (characters in
       occurrences beyond the first, over the segment characters)
-      <= 0.20 each — all four are row-local array arithmetic
-      (n − n_distinct and Σlen − Σlen(distinct)), zero shuffle;
+      <= 0.20 each (n − n_distinct and Σlen − Σlen(distinct));
     - TOP n-gram COVERAGE fraction for n=2,3,4: tokens covered by the
       occurrences of the most frequent word n-gram (interval union, so
       overlapping occurrences never double-count), over the token
@@ -268,231 +330,85 @@ def gopher_repetition(
     counts the middle tokens twice). Column names say cov, not char,
     to keep the departure visible.
 
-    Scale shape (r14): every signal is a function of ONE document, so
-    nothing leaves its row — the n-gram machinery runs as row-local
-    higher-order functions (per n: md5 digests of the gram windows
-    sorted as (digest, position) structs, a run-length fold for the
-    most-frequent gram with the (count desc, digest desc) tie-break,
-    neighbor-equality marks for duplicated occurrences, and a
-    gaps-and-islands interval-union fold over ascending positions) —
-    ZERO exchanges, no join-back. The r13 form exploded a 9-way gram
-    relation that was replanned under three consumers (counts + two
-    marked-position semi-joins) and shuffled (id, n, digest) rows
-    three times; at sf0.1 that read 7.1 s vs 1.4 s for this shape,
-    with the gopher gate fold (which runs the family 5x) dropping in
-    proportion. Every count and interval length is an exact integer,
-    so the 6 dp ratio rounding cannot diverge cross-engine; the md5
-    digest keeps the tie-break ANSI-replayable (string comparison on
-    lowercase hex is identical in Spark and DuckDB).
+    Scale shape: every signal is a function of ONE document, so
+    nothing leaves its row — ZERO keyed exchanges, no join-back. The
+    counts come from one pickled Python UDF per row
+    (``repetition_counts``: exact integers, one pass over the grams);
+    the ratios, their 6 dp rounding and the pass/keep logic stay Spark
+    expressions. (Spark interprets higher-order-function lambdas
+    element by element, and analysing a chain of them cost more driver
+    time per micro-batch than the Python pass costs in total.) Every
+    count and interval length is an exact integer, so the 6 dp ratio
+    rounding cannot diverge cross-engine; the md5 digest keeps the
+    tie-break ANSI-replayable (string comparison on lowercase hex is
+    identical in Spark and DuckDB). The UDF pickles
+    ``repetition_counts`` by reference, so Python workers must be able
+    to import this package (as for the ``streaming/stateful.py``
+    operators).
 
     Parallelism guard: a zero-shuffle plan runs on exactly as many
     tasks as the scan has splits, so a small single-file input would
     serialize the (heavy) per-row gram work onto one core. When the
     incoming partition count is below the session's default
     parallelism the text is round-robin repartitioned ONCE — a single
-    narrow exchange of (id, text), still ~27x fewer bytes than the r13
-    form's triple (id, n, digest) gram shuffle; on a real multi-split
-    corpus (the 100 TB case) the condition is false and the plan stays
+    narrow exchange of (id, text); on a real multi-split corpus (the
+    100 TB case) the condition is false and the plan stays
     shuffle-free."""
-    th = dict(GOPHER_REPETITION_THRESHOLDS)
     from realtime_market_data_pipeline_spark.io import ensure_parallelism
 
-    df = ensure_parallelism(df)
+    th = dict(GOPHER_REPETITION_THRESHOLDS)
     if thresholds:
         th.update(thresholds)
-    t = F.col(text_col)
-    toks = tokens(text_col)
-
-    def _arr_chars(arr: Column) -> Column:
-        return F.aggregate(
-            arr, F.lit(0), lambda acc, x: acc + F.length(x)
-        )
-
-    # NULL text guard (r12 advice fix): F.size on a NULL array is -1,
-    # so an unguarded NULL document would flow n_toks=-1 / n_seg=-1
-    # into every ratio and emit NULL keep instead of routing. The
-    # route-don't-raise convention: invalid rows carry n_toks=0, NULL
-    # signals, pass_*=false, keep=false.
-    valid = t.isNotNull() & (F.size(toks) > 0)
-
-    def _seg_signals(arr: Column, prefix: str) -> list[Column]:
-        n_seg = F.size(arr)
-        n_dis = F.size(F.array_distinct(arr))
-        c_all = _arr_chars(arr)
-        c_dis = _arr_chars(F.array_distinct(arr))
-        frac = F.round((n_seg - n_dis).cast("double") / n_seg, 6)
-        cfrac = F.when(c_all > 0, F.round(
-            (c_all - c_dis).cast("double") / c_all, 6
-        )).otherwise(F.lit(0.0))
-        return [
-            F.when(valid, frac).alias(f"dup_{prefix}_frac"),
-            F.when(valid, cfrac).alias(f"dup_{prefix}_char_frac"),
-        ]
-
-    # extra_cols (r15): carry caller columns through the projection
-    # chain so a composed gate (structural ⋈ repetition on the SAME
-    # relation) needs no join-back — the gopher_quality convention
-    base = df.select(
-        id_col,
-        *extra_cols,
-        F.when(valid, F.size(toks)).otherwise(F.lit(0)).alias("n_toks"),
-        *_seg_signals(F.split(t, "\n"), "line"),
-        *_seg_signals(F.split(t, "\n\n"), "para"),
-        toks.alias("__t"),
+    counts = F.udf(
+        repetition_counts,
+        "struct<" + ", ".join(
+            f"{f}: bigint" for f in REPETITION_COUNT_FIELDS
+        ) + ">",
+        useArrow=False,
     )
-    NS = tuple(range(2, 11))
+    base = ensure_parallelism(df).select(
+        id_col, *extra_cols, counts(F.col(text_col)).alias("__c")
+    )
+    # The Spark side is SQL expression text: every Python Column builder
+    # is one py4j round trip, and building these ~30 expressions that
+    # way took ~2,500 of them (about 1 s of driver time per call).
+    keys = ["`" + c.replace("`", "``") + "`" for c in (id_col, *extra_cols)]
 
-    def _island_fold(positions_sql: str, n: int) -> str:
-        """Gaps-and-islands interval-union fold over an ASCENDING int
-        position array: occurrences cover [i, i+n), islands break when
-        the start gap exceeds n, coverage per island is
-        max(i) + n - min(i) — the exact arithmetic of the r13 windowed
-        form, folded row-locally."""
-        return (
-            f"aggregate({positions_sql}, "
-            f"struct(CAST(0 AS BIGINT) AS acc, -1 AS mn, -1 AS prev), "
-            f"(st, p) -> IF(st.prev < 0, "
-            f"struct(st.acc AS acc, p AS mn, p AS prev), "
-            f"IF(p - st.prev > {n}, "
-            f"struct(st.acc + st.prev + {n} - st.mn AS acc, "
-            f"p AS mn, p AS prev), "
-            f"struct(st.acc AS acc, st.mn AS mn, p AS prev))), "
-            f"st -> IF(st.prev < 0, CAST(NULL AS BIGINT), "
-            f"st.acc + st.prev + {n} - st.mn))"
-        )
+    def ratio(num: str, den: str) -> str:
+        return f"round(CAST({num} AS DOUBLE) / {den}, 6)"
 
-    sel = base
-    for n in NS:
-        # (md5, position) structs of every length-n gram window, sorted
-        # by (digest, position) so equal digests are adjacent — the
-        # row-local equivalent of the r13 (id, n, digest) count agg.
-        # Kept as a real projected column (the consumers reference it
-        # many times, so CollapseProject leaves it evaluated once per
-        # row) and DROPPED as soon as its coverage column exists: each
-        # chained Project materializes every live column, so letting
-        # all nine gram arrays ride to the end would copy them O(NS)
-        # times per row.
-        s = f"__s{n}"
-        sel = sel.withColumn(
-            s,
-            F.when(
-                F.size("__t") >= n,
-                F.expr(
-                    f"array_sort(transform(sequence(0, size(__t) - {n}),"
-                    f" i -> struct("
-                    f"md5(array_join(slice(__t, i + 1, {n}), ' ')) AS h,"
-                    f" i AS i)))"
-                ),
-            ),
+    fracs = {}
+    for seg in ("line", "para"):
+        n, chars = f"__c.{seg}_n", f"__c.{seg}_chars"
+        fracs[f"dup_{seg}_frac"] = ratio(f"{n} - __c.{seg}_distinct", n)
+        fracs[f"dup_{seg}_char_frac"] = (
+            f"CASE WHEN {chars} > 0 THEN "
+            f"{ratio(f'{chars} - __c.{seg}_distinct_chars', chars)} "
+            f"WHEN {chars} = 0 THEN 0.0D END"
         )
-        if n >= 5:
-            # positions whose digest equals a sorted neighbor's =
-            # positions of ANY gram occurring >= 2 times (the dup_h
-            # semi-join of the r13 form), re-sorted ascending for the
-            # island fold
-            dup_pos = (
-                f"array_sort(filter(transform(sequence(0, size({s}) - 1), "
-                f"j -> IF((j > 0 AND {s}[j].h = {s}[j-1].h) "
-                f"OR (j < size({s}) - 1 AND {s}[j].h = {s}[j+1].h), "
-                f"{s}[j].i, -1)), p -> p >= 0))"
-            )
-            sel = sel.withColumn(
-                f"dup{n}_cov",
-                F.when(
-                    F.col(s).isNotNull(), F.expr(_island_fold(dup_pos, n))
-                ),
-            ).drop(s)
-        else:
-            # run-length fold over the digest-sorted structs picks the
-            # most frequent gram, ties to the LARGEST digest —
-            # identical to the r13 row_number() over (count desc,
-            # digest desc) pick (md5 hex is lowercase ASCII, so string
-            # order matches in any engine)
-            best = (
-                f"aggregate({s}, "
-                f"struct('' AS ch, 0 AS cc, '' AS bh, 0 AS bc), "
-                f"(st, e) -> IF(e.h = st.ch, "
-                f"struct(st.ch AS ch, st.cc + 1 AS cc, "
-                f"st.bh AS bh, st.bc AS bc), "
-                f"struct(e.h AS ch, 1 AS cc, "
-                f"IF(st.cc > st.bc OR (st.cc = st.bc AND st.ch > st.bh), "
-                f"st.ch, st.bh) AS bh, "
-                f"IF(st.cc > st.bc OR (st.cc = st.bc AND st.ch > st.bh), "
-                f"st.cc, st.bc) AS bc)), "
-                f"st -> IF(st.cc > st.bc OR (st.cc = st.bc AND st.ch > st.bh), "
-                f"struct(st.ch AS h, st.cc AS c), "
-                f"struct(st.bh AS h, st.bc AS c)))"
-            )
-            b = f"__b{n}"
-            sel = sel.withColumn(
-                b, F.when(F.col(s).isNotNull(), F.expr(best))
-            )
-            # positions of the top gram: filter keeps (digest,
-            # position) order, so within the equal-digest run positions
-            # are already ascending; coverage only counts when the gram
-            # repeats (the r13 top_h came from dup_h's c >= 2 filter)
-            top_pos = f"transform(filter({s}, e -> e.h = {b}.h), e -> e.i)"
-            sel = sel.withColumn(
-                f"top{n}_cov",
-                F.when(
-                    F.col(b).isNotNull() & (F.col(f"{b}.c") >= 2),
-                    F.expr(_island_fold(top_pos, n)),
-                ),
-            ).drop(s, b)
-    out = sel
-    frac_cols: list[Column] = []
-    pass_cols: list[Column] = []
-    keep: Column = F.lit(True)
-    # every pass column coalesces NULL -> false so the invalid-row
-    # stripe (NULL signals, n_toks=0 -> NULL fracs via /0) routes to
-    # keep=false instead of propagating NULL through the AND chain
-    for name in ("dup_line_frac", "dup_line_char_frac",
-                 "dup_para_frac", "dup_para_char_frac"):
-        p = F.coalesce(F.col(name) <= th[name], F.lit(False))
-        pass_cols.append(p.alias(f"pass_{name}"))
-        keep = keep & p
-    # n_toks > 0 guards the division itself (ANSI mode raises on /0;
-    # the invalid stripe carries n_toks = 0) — NULL frac routes the
-    # pass column to false via the coalesce
-    for n in (2, 3, 4):
-        name = f"top{n}_cov_frac"
-        frac = F.when(
-            F.col("n_toks") > 0,
-            F.round(
-                F.coalesce(F.col(f"top{n}_cov"), F.lit(0)).cast("double")
-                / F.col("n_toks"),
-                6,
-            ),
+    # n_toks > 0 guards the division itself (ANSI mode raises on /0)
+    for cov in (f for f in REPETITION_COUNT_FIELDS if f.endswith("_cov")):
+        fracs[f"{cov}_frac"] = (
+            f"CASE WHEN __c.n_toks > 0 THEN "
+            f"{ratio(f'__c.{cov}', '__c.n_toks')} END"
         )
-        frac_cols.append(frac.alias(name))
-        p = F.coalesce(frac <= th[name], F.lit(False))
-        pass_cols.append(p.alias(f"pass_{name}"))
-        keep = keep & p
-    for n in (5, 6, 7, 8, 9, 10):
-        name = f"dup{n}_cov_frac"
-        frac = F.when(
-            F.col("n_toks") > 0,
-            F.round(
-                F.coalesce(F.col(f"dup{n}_cov"), F.lit(0)).cast("double")
-                / F.col("n_toks"),
-                6,
-            ),
-        )
-        frac_cols.append(frac.alias(name))
-        p = F.coalesce(frac <= th[name], F.lit(False))
-        pass_cols.append(p.alias(f"pass_{name}"))
-        keep = keep & p
-    return out.select(
-        id_col,
-        *extra_cols,
+    # NULL text: the route-don't-raise convention — n_toks=0, NULL
+    # signals, and every pass coalesces NULL -> false, so keep=false
+    sig = base.selectExpr(
+        *keys,
+        "CAST(coalesce(__c.n_toks, 0) AS INT) AS n_toks",
+        *[f"{e} AS {name}" for name, e in fracs.items()],
+    )
+    passes = {
+        name: f"coalesce({name} <= {float(th[name])!r}D, false)"
+        for name in fracs
+    }
+    return sig.selectExpr(
+        *keys,
         "n_toks",
-        "dup_line_frac",
-        "dup_line_char_frac",
-        "dup_para_frac",
-        "dup_para_char_frac",
-        *frac_cols,
-        *pass_cols,
-        keep.alias("keep"),
+        *fracs,
+        *[f"{e} AS pass_{name}" for name, e in passes.items()],
+        " AND ".join(passes.values()) + " AS keep",
     )
 
 

@@ -10519,12 +10519,13 @@ def doc_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher REPETITION filters (r12, Rae et al. 2021 Appendix A Table
     A1 — ``text.gopher_repetition``): the other half of the Gopher gate
     (``doc_gopher_rules`` certifies the structural rules). Thirteen
-    signals — duplicate line/paragraph fraction + character fraction
-    (row-local array arithmetic, zero shuffle), top n-gram coverage for
-    n=2,3,4 and duplicate n-gram coverage for n=5..10 (interval-union
-    token coverage; the md5-digest-only gram wire, one keyed count agg,
-    one windowed top-pick, two gaps-and-islands merges). The raw corpus
-    is single-line word soup, so a doc_id%9 decoration stripe plants
+    signals — duplicate line/paragraph fraction + character fraction,
+    top n-gram coverage for n=2,3,4 and duplicate n-gram coverage for
+    n=5..10 (interval-union token coverage) — all from exact per-row
+    counts of one row-local Python pass, zero keyed exchanges; the
+    oracle computes the same coverage relationally (one keyed count
+    agg, one windowed top-pick, two gaps-and-islands merges). The raw
+    corpus is single-line word soup, so a doc_id%9 decoration stripe plants
     repeated lines, repeated paragraphs, a dominant bigram run, and a
     repeated 7-token sentence — every rule family non-vacuous at every
     SF — and the oracle replays the decoration, every ratio, the
@@ -10654,10 +10655,9 @@ def online_full_gopher_gate_fold(
     why-booleans), and ``accumulated_equals_batch_operator`` — the
     accumulated relation (both families' signals + booleans + the
     joined keep + text) equals one batch run of the same
-    gopher_quality ⋈ gopher_repetition compose. Scale shape: the
-    structural side stays zero-shuffle per batch; the repetition side
-    adds its keyed count exchange per batch (the batch operator's
-    certified shape)."""
+    gopher_quality ⋈ gopher_repetition compose. Scale shape: both
+    families are row-local per batch (the repetition counts are one
+    Python UDF pass), so the writer adds no keyed exchange."""
     from realtime_market_data_pipeline_spark.streaming import curation
 
     out_dir, rej_dir = _writer_state_dirs(

@@ -11,7 +11,8 @@ the document level.
 Writer contract (shared with streaming/dedup.py and streaming/sinks.py):
 rows land in ``<dir>/batch_id=N`` via dynamic-partition overwrite, so a
 replayed micro-batch rewrites itself (exactly-once landing). The gate
-itself is pure per-row Column arithmetic — zero shuffle exchanges
+itself is per-row work — Column arithmetic plus, for the repetition
+rules, one row-local Python UDF pass — with zero keyed exchanges
 (plan-pinned for the batch operator), so the stream's per-batch cost is
 one scan of the batch.
 """
@@ -45,16 +46,16 @@ def quality_gate_writer(
     structural rules above joined per-batch with the repetition
     family (``text.gopher_repetition`` — dup line/paragraph fractions,
     n-gram coverage), keep = both conjunctions, and rejects carry BOTH
-    families' why-booleans. The repetition side adds its keyed count
-    exchange per batch (the batch operator's documented shape); the
-    structural-only gate stays zero-shuffle."""
+    families' why-booleans. Neither family adds a keyed exchange: the
+    repetition counts come from one row-local Python UDF pass (the
+    batch operator's shape), so Python workers must be able to import
+    this package."""
     from realtime_market_data_pipeline_spark.operators.text import (
         gopher_quality,
         gopher_repetition,
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         scored = gopher_quality(
             batch_df,
             text_col=text_col,
@@ -63,13 +64,11 @@ def quality_gate_writer(
             **gopher_kwargs,
         )
         if repetition:
-            # r15: both rule families are row-local projections of the
-            # SAME batch (the repetition family has been join-free
-            # since its r14 HOF rewrite), so the repetition columns
-            # compose directly onto the structural output via
-            # extra_cols passthrough — the per-batch id join this used
-            # to do shuffled the full batch width (text included)
-            # twice for rows that never left their partition
+            # both rule families are row-local projections of the SAME
+            # batch, so the repetition columns compose directly onto the
+            # structural output via extra_cols passthrough — no id join
+            # (one would shuffle the full batch width, text included,
+            # for rows that never leave their partition)
             scored = scored.withColumnRenamed("keep", "keep_structural")
             carried = tuple(c for c in scored.columns if c != id_col)
             scored = gopher_repetition(
@@ -84,39 +83,32 @@ def quality_gate_writer(
                 F.col("keep_structural") & F.col("keep_repetition"),
             )
         scored = scored.persist()
+        # NULL-text documents get NULL signals, so keep is NULL — both
+        # filter(keep) and filter(~keep) would drop them from BOTH
+        # tables, silently losing rows from the auditable split. Route
+        # NULL keep to rejects: a document with no text is a reject,
+        # and the NULL signal columns record why.
+        keep3 = F.coalesce(F.col("keep"), F.lit(False))
         try:
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
+            # per-write dynamic overwrite: replaces only this batch's
+            # partition without touching the session-global conf, so
+            # concurrent queries on one session never see it flipped
+            (
+                scored.filter(keep3)
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(out_dir)
             )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            # NULL-text documents get NULL signals, so keep is NULL —
-            # both filter(keep) and filter(~keep) would drop them from
-            # BOTH tables, silently losing rows from the auditable
-            # split (r12 advice fix). Route NULL keep to rejects: a
-            # document with no text is a reject, and the NULL signal
-            # columns record why.
-            keep3 = F.coalesce(F.col("keep"), F.lit(False))
-            try:
+            if rejects_dir is not None:
                 (
-                    scored.filter(keep3)
+                    scored.filter(~keep3)
                     .withColumn("batch_id", F.lit(batch_id))
                     .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                if rejects_dir is not None:
-                    (
-                        scored.filter(~keep3)
-                        .withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .partitionBy("batch_id")
-                        .parquet(rejects_dir)
-                    )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
+                    .parquet(rejects_dir)
                 )
         finally:
             scored.unpersist()

@@ -284,3 +284,28 @@ def test_ensure_parallelism_guard_shapes(spark):
     out = ensure_parallelism(bj)
     assert out is not bj
     assert out.rdd.getNumPartitions() == target
+
+
+def test_ensure_parallelism_counts_swallowed_failures(
+    spark, monkeypatch, caplog
+):
+    """A failure inside the best-effort guard is counted by exception
+    class and logged once, and the input passes through unchanged."""
+    import logging
+    from collections import Counter
+
+    from realtime_market_data_pipeline_spark import io as sio
+
+    def boom(_plan):
+        raise RuntimeError("plan inspection failed")
+
+    monkeypatch.setattr(sio, "_has_shuffle_exchange", boom)
+    monkeypatch.setattr(sio, "PARALLELISM_GUARD_FAILURES", Counter())
+    df = spark.range(10)
+    with caplog.at_level(logging.WARNING, logger=sio.__name__):
+        assert sio.ensure_parallelism(df) is df
+        assert sio.ensure_parallelism(df) is df
+    assert sio.PARALLELISM_GUARD_FAILURES == {"RuntimeError": 2}
+    warned = [r for r in caplog.records if r.name == sio.__name__]
+    assert len(warned) == 1
+    assert "plan inspection failed" in warned[0].getMessage()

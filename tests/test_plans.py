@@ -829,8 +829,8 @@ def test_r12_operator_plan_shapes(spark):
 
     rep = physical("doc_gopher_repetition")
     assert "SortMergeJoin" not in rep
-    # r14: the gram machinery is row-local higher-order functions — no
-    # keyed exchange at all; the only allowed Exchange is the adaptive
+    # the gram counts are one row-local Python UDF pass — no keyed
+    # exchange at all; the only allowed Exchange is the adaptive
     # round-robin parallelism guard for small single-split inputs
     assert len(re.findall(r"Exchange hashpartitioning", rep)) == 0
 

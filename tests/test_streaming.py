@@ -2926,6 +2926,49 @@ def test_streaming_full_gopher_gate_with_repetition(spark, tmp_path):
     assert {i: True for i in kept} | {i: False for i in dropped} == twin
 
 
+def test_quality_gate_writer_per_write_dynamic_overwrite(
+    spark, tmp_path, monkeypatch
+):
+    """The gate writer overwrites dynamically per write, not by flipping
+    the session conf: the conf is never set and reads the same before
+    and after, and a replayed batch rewrites only its own batch_id
+    partition even when the session default is static overwrite."""
+    from realtime_market_data_pipeline_spark.streaming import curation
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    conf_sets = []
+    real_set = spark.conf.set
+    monkeypatch.setattr(
+        spark.conf, "set", lambda k, v: (conf_sets.append(k), real_set(k, v))
+    )
+    try:
+        out, rej = str(tmp_path / "out"), str(tmp_path / "rej")
+        writer = curation.quality_gate_writer(
+            out, rej, repetition=True, min_words=3,
+            required_words=("the", "data"),
+        )
+        good = "the data " + " ".join(f"word{i}" for i in range(8))
+        schema = "doc_id long, text string"
+        writer(spark.createDataFrame([(0, good), (1, "zz")], schema), 0)
+        assert spark.conf.get(key) == "static"
+        writer(spark.createDataFrame([(2, good), (3, "zz")], schema), 1)
+        # replay of batch 1 with different content
+        writer(spark.createDataFrame([(4, good), (5, "zz")], schema), 1)
+        assert spark.conf.get(key) == "static"
+
+        def landed(d):
+            rows = spark.read.parquet(d).collect()
+            return sorted((r.batch_id, r.doc_id) for r in rows)
+
+        assert landed(out) == [(0, 0), (1, 4)]
+        assert landed(rej) == [(0, 1), (1, 5)]
+        assert key not in conf_sets
+    finally:
+        real_set(key, before)
+
+
 def test_streaming_mixture_gate_against_calibrated_rates(spark, tmp_path):
     """r14: mixture gate online — the offline-calibrated exact-rational
     rate table gates micro-batches with the batch operator's integer

@@ -790,6 +790,105 @@ def test_gopher_repetition_signals_and_coverage(spark):
         )
 
 
+def _counts(text):
+    from realtime_market_data_pipeline_spark.operators import text as tx
+
+    c = tx.repetition_counts(text)
+    return None if c is None else dict(zip(tx.REPETITION_COUNT_FIELDS, c))
+
+
+# Java's \s is [ \t\n\x0B\f\r]; NBSP (U+00A0) and EM SPACE (U+2003)
+# are NOT whitespace to Spark's split and must stay inside tokens
+_WS_DOCS = [
+    "a\x0bb c",
+    "a\x0cb\fc",
+    "one\r\ntwo\r\nthree",
+    "tab\tsep\t\tword",
+    "nb\u00a0sp stays one",
+    "em\u2003space stays one",
+    "  lead and trail  ",
+    "\t\n",
+    "é é é",
+    "",
+]
+
+
+def test_repetition_counts_whitespace_matches_spark_split(spark):
+    """The pure repetition pass tokenizes exactly like Spark's
+    split(text, '\\s+'): ASCII whitespace (incl. \\x0B and \\f) splits,
+    Unicode spaces do not, leading/trailing runs yield empty tokens."""
+    from pyspark.sql import functions as F
+
+    from realtime_market_data_pipeline_spark.operators import text as tx
+
+    rows = list(enumerate(_WS_DOCS)) + [(len(_WS_DOCS), None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    spark_n = {
+        r.doc_id: r.n
+        for r in df.select(
+            "doc_id", F.size(F.split("text", r"\s+")).alias("n")
+        ).collect()
+    }
+    op_n = {r.doc_id: r.n_toks for r in tx.gopher_repetition(df).collect()}
+    for i, t in rows:
+        if t is None:
+            assert _counts(t) is None and op_n[i] == 0
+            continue
+        assert _counts(t)["n_toks"] == spark_n[i] == op_n[i], repr(t)
+    assert _counts("nb\u00a0sp stays one")["n_toks"] == 3
+    assert _counts("em\u2003space stays one")["n_toks"] == 3
+    assert _counts("a\x0bb c")["n_toks"] == 3
+    # leading and trailing runs each add one empty token
+    assert _counts("  lead and trail  ")["n_toks"] == 5
+
+
+def test_repetition_counts_edge_cases():
+    """Exact counts on degenerate documents (no Spark needed)."""
+    assert _counts(None) is None
+    empty = _counts("")
+    assert empty["n_toks"] == 1 and empty["line_n"] == 1
+    assert empty["line_chars"] == 0 and empty["para_distinct_chars"] == 0
+    assert all(v == 0 for k, v in empty.items() if k.endswith("_cov"))
+    # 'a a a a': bigram at 0,1,2 and trigram at 0,1 cover all 4 tokens
+    # once (interval union, never 1.5x); no 4-gram repeats
+    aaaa = _counts("a a a a")
+    assert (aaaa["top2_cov"], aaaa["top3_cov"], aaaa["top4_cov"]) == (4, 4, 0)
+    # shorter than n: no n-gram exists, coverage 0
+    short = _counts("x y x")
+    assert short["top2_cov"] == 0 and short["dup5_cov"] == 0
+    assert _counts("x x")["top2_cov"] == 0  # one bigram occurrence
+    # lines and paragraphs keep empty pieces, like Spark's split
+    segs = _counts("p\n\np\n\n")
+    assert (segs["line_n"], segs["line_distinct"]) == (5, 2)
+    assert (segs["para_n"], segs["para_distinct"]) == (3, 2)
+    assert (segs["para_chars"], segs["para_distinct_chars"]) == (2, 1)
+    # a repeated 5-token run: both occurrences covered, overlap merged
+    run = _counts("q " + "a b c d e " * 2 + "z")
+    assert run["dup5_cov"] == 10 and run["dup6_cov"] == 0
+    # leading whitespace: the empty first token is a real gram member
+    lead = _counts(" a a")
+    assert lead["n_toks"] == 3 and lead["top2_cov"] == 0
+
+
+def test_repetition_counts_top_tie_broken_by_md5():
+    """Tied top n-gram counts resolve to the LARGEST md5 hex digest of
+    the space-joined gram — the (count desc, digest desc) pick the
+    DuckDB oracle replays. The two documents put the winner first and
+    second in the text, with the larger and the smaller coverage, so
+    neither text order nor coverage can stand in for the digest."""
+    from hashlib import md5
+
+    def hexd(g):
+        return md5(g.encode()).hexdigest()
+
+    # 'z z' at 0,1 (covers 3) ties 'u v' at 3,6 (covers 4)
+    assert hexd("u v") > hexd("z z")
+    assert _counts("z z z u v w u v")["top2_cov"] == 4
+    # 'u u' at 0,1 (covers 3) ties 'a b' at 3,6 (covers 4)
+    assert hexd("u u") > hexd("a b")
+    assert _counts("u u u a b w a b")["top2_cov"] == 3
+
+
 def test_warc_wrap_parse_split_roundtrip(spark):
     """r12: WARC crawl ingestion — wrap_warc plants spec-shaped
     response records in Column arithmetic, parse_warc recovers every
