@@ -117,11 +117,33 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_base_hash(col: Column) -> Column:
-    """Shingle → 60-bit integer: first 15 hex digits of md5, parsed base-16,
-    reduced mod P. One md5 per shingle regardless of signature width."""
-    x = F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    return x % MINHASH_P
+def _minhash_aggs(token_col: str, num_hashes: int) -> list[Column]:
+    """The ``num_hashes`` signature aggregates ``min((aᵢ·x + bᵢ) mod P) AS
+    mhᵢ`` over a token column, where x is the token's first 15 md5 hex
+    digits parsed base-16, reduced mod P — one md5 per token regardless
+    of signature width. Written as SQL text: building the same tree from
+    Column objects costs ~1,200 py4j round trips per signature."""
+    tok = "`" + token_col.replace("`", "``") + "`"
+    x = f"(CAST(conv(substring(md5({tok}), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P})"
+    return [
+        F.expr(f"min(({a} * {x} + {b}) % {MINHASH_P}) AS mh{i}")
+        for i, (a, b) in enumerate(minhash_params(num_hashes))
+    ]
+
+
+def band_structs_sql(num_hashes: int = 16, band_size: int = 4) -> str:
+    """SQL text of the ``array<struct<band_id, band_key>>`` that bands a
+    ``mh0..mh{n-1}`` signature row: band b's key is its ``band_size``
+    minhashes joined with ``|``. The one definition of the band-key
+    format (``band_key_rows`` and the streaming MinHash writer)."""
+    if num_hashes % band_size:
+        raise ValueError(f"band_size {band_size} must divide num_hashes {num_hashes}")
+    return "array(" + ", ".join(
+        f"named_struct('band_id', {b}, 'band_key', concat_ws('|', "
+        + ", ".join(f"mh{b * band_size + j}" for j in range(band_size))
+        + "))"
+        for b in range(num_hashes // band_size)
+    ) + ")"
 
 
 def minhash_signature(
@@ -133,11 +155,12 @@ def minhash_signature(
 ) -> DataFrame:
     """MinHash signature as ``num_hashes`` long columns ``mh0..mh{n-1}``:
     ``mhᵢ = min over shingles of (aᵢ·h(shingle) + bᵢ) mod P`` with ONE md5
-    per shingle (``minhash_base_hash``) and ``num_hashes`` cheap affine
-    transforms — the standard universal-hash minhash family. The earlier
-    scheme hashed ``md5('s{i}:'||shingle)`` per function, i.e. num_hashes
-    md5+concat evaluations per shingle; at 100 TB that multiplies the
-    dominant scan-side cost by the signature width for no recall gain.
+    per shingle and ``num_hashes`` cheap affine transforms
+    (``_minhash_aggs``) — the standard universal-hash minhash family. The
+    earlier scheme hashed ``md5('s{i}:'||shingle)`` per function, i.e.
+    num_hashes md5+concat evaluations per shingle; at 100 TB that
+    multiplies the dominant scan-side cost by the signature width for no
+    recall gain.
 
     Computed over the exploded shingle relation (``shingles_long``) with a
     groupBy(id) of ``min`` aggregates: every expression is flat and
@@ -150,12 +173,7 @@ def minhash_signature(
     usual distinct-shingle step (an extra exchange on (id, shingle)) is
     skipped — identical signatures, one shuffle less."""
     sh = shingles_long(df, text_col, id_col, k=shingle_k, distinct=False)
-    x = minhash_base_hash(F.col("shingle"))
-    aggs = [
-        F.min((F.lit(a) * x + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_params(num_hashes))
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy(id_col).agg(*_minhash_aggs("shingle", num_hashes))
 
 
 def minhash_sig_sets(
@@ -181,13 +199,7 @@ def minhash_sig_sets(
     verify stage exists; use plain ``minhash_signature`` when only the
     signature is needed."""
     sh = shingles_long(df, text_col, id_col, k=shingle_k, distinct=False)
-    x = minhash_base_hash(F.col("shingle"))
-    aggs = [
-        F.min((F.lit(a) * x + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_params(num_hashes))
-    ]
-    aggs.append(F.collect_set("shingle").alias("sh"))
-    return sh.groupBy(id_col).agg(*aggs)
+    return minhash_sig_sets_from_tokens(sh, id_col, "shingle", num_hashes)
 
 
 def minhash_sig_sets_from_tokens(
@@ -204,13 +216,10 @@ def minhash_sig_sets_from_tokens(
     fingerprints; the banding/verify stages downstream are identical).
     One groupBy: num_hashes affine mins + collect_set, same plan shape
     and ReuseExchange behavior as the text form."""
-    x = minhash_base_hash(F.col(token_col))
-    aggs = [
-        F.min((F.lit(a) * x + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_params(num_hashes))
-    ]
-    aggs.append(F.collect_set(token_col).alias("sh"))
-    return tokens_df.groupBy(id_col).agg(*aggs)
+    return tokens_df.groupBy(id_col).agg(
+        *_minhash_aggs(token_col, num_hashes),
+        F.collect_set(token_col).alias("sh"),
+    )
 
 
 def jaccard_from_sets(
@@ -254,28 +263,11 @@ def band_key_rows(
     join key. One scan: explodes an array of (band_id, band_key) structs
     rather than unioning n_bands re-scans of the signature relation. The
     shared candidate-generation primitive for batch LSH pairing
-    (``lsh_candidate_pairs``) and the streaming dedup filter
-    (streaming/dedup.py), which joins new docs' band keys against a
-    persistent store of accepted docs' keys."""
-    assert num_hashes % band_size == 0
-    n_bands = num_hashes // band_size
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(
-                    "|", *[F.col(f"mh{b * band_size + j}") for j in range(band_size)]
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return signatures.select(
-        F.col(id_col), F.explode(band_structs).alias("band")
-    ).select(
-        id_col,
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_key").alias("band_key"),
+    (``lsh_candidate_pairs``) and fuzzy decontamination; the streaming
+    MinHash writer bands with the same ``band_structs_sql``."""
+    key = "`" + id_col.replace("`", "``") + "`"
+    return signatures.selectExpr(
+        key, f"inline({band_structs_sql(num_hashes, band_size)})"
     )
 
 

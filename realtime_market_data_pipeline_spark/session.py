@@ -29,6 +29,13 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a cluster
     pass ``None`` after spark-submit has set the master, or an explicit URL.
+
+    Python workers get the package's parent directory prepended to
+    ``spark.executorEnv.PYTHONPATH`` (a caller's value is kept after it):
+    the pickled Python UDFs (``text.repetition_counts``, the multimodal
+    decoders) import the package inside the worker, whatever the
+    driver's working directory. A session built elsewhere must do the
+    same itself.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -65,7 +72,11 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (pkg_parent, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

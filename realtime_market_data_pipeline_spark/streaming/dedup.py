@@ -15,41 +15,58 @@ streaming/sinks.py):
 1. MinHash signatures of the new docs (``minhash_signature`` — one md5 per
    shingle, codegen'd; docs too short to shingle carry no signature and are
    accepted unconditionally: an empty shingle set matches nothing).
-2. Candidates = band-key equi-join (``band_key_rows``) of the new batch
-   against (a) the signature store of previously accepted docs and (b)
-   itself (lower-id side wins in-batch).
-3. Verify: candidate pairs are scored by ESTIMATED Jaccard — the fraction
-   of agreeing minhash components. The store keeps 16 longs per accepted
-   doc (never text or shingle sets), so history verification costs
-   O(candidates·num_hashes) with a bounded, privacy-friendly store; the
-   estimator is unbiased with stderr ≈ √(J(1−J)/16) ≈ 0.1, and the band
-   pre-filter already guarantees candidates share a full band. (The batch
-   operators verify with exact shingle-set Jaccard — use them for one-shot
-   corpus dedup where the text is at hand.)
+2. One banded join. The reference relation is the batch's own
+   signatures (tagged in-batch) unioned with the store of previously
+   accepted docs (``batch_id < current``). Both sides explode into
+   (band_id, band_key) rows that carry their minhashes
+   (``band_structs_sql`` — the band-key format ``band_key_rows`` uses),
+   and ONE equi-join on (band_id, band_key) pairs them. The residual
+   condition keeps store rows and lower-id in-batch rows — dups
+   included, so greedy-by-id — and verifies in the same pass by
+   ESTIMATED Jaccard, the fraction of agreeing minhash components.
+   The new ids it leaves are the batch's dups, one row per matching
+   pair: the landing anti-joins need no distinct, and skipping it
+   saves an exchange. The store
+   keeps 16 longs per accepted doc (never text or shingle sets), so
+   verification costs O(candidates·num_hashes) with a bounded,
+   privacy-friendly store; the estimator is unbiased with stderr ≈
+   √(J(1−J)/16) ≈ 0.1, among pairs that already share a full band.
+   (The batch operators verify with exact shingle-set Jaccard — use
+   them for one-shot corpus dedup where the text is at hand.)
+3. Every expression (the signature aggregates, the band structs, the
+   join condition) is SQL text: built from Column objects, the same
+   trees cost ~7,000 py4j round trips per call against ~600 now, and
+   the single join runs 10-11 Spark jobs per call against 20-23 for the
+   earlier two-leg plan (a band join, a distinct and two verify joins
+   each for history and in-batch, then a union distinct).
 4. Survivors' rows land in ``out_dir/batch_id=N``, their signatures in
-   ``store_dir/batch_id=N`` — both dynamic-partition overwrites, so a
-   replayed batch rewrites itself (exactly-once landing, the
+   ``store_dir/batch_id=N`` — both per-write dynamic-partition
+   overwrites (the session conf is never touched), so a replayed batch
+   rewrites itself (exactly-once landing, the
    ``idempotent_parquet_writer`` pattern). The store read filters
    ``batch_id < current``: a crashed attempt's own partition is invisible
    to its replay, which would otherwise match every doc against its own
-   half-written signatures and drop the whole batch.
+   half-written signatures and drop the whole batch. A store that
+   cannot be read fails the batch; only a missing or data-less store
+   reads as empty.
 
-100 TB notes: the per-batch cost is dominated by the store-side band join —
-new-batch band keys are small (broadcastable), so the join is one pruned
-scan of the store. At real scale the store becomes a bucketed table (or
-Delta/Iceberg with a band-key z-order) so the join co-locates instead of
-scanning; the parquet form keeps this container-runnable. Bucketing is
-EXPLICITLY DEFERRED, not staged: Spark bucketing needs ``saveAsTable``
-into a metastore, whose overwrite semantics do not compose with the
-per-partition ``batch_id=N`` replay guard these writers rely on — a
-table-format store (Delta/Iceberg MERGE with a transaction log) is the
-right production swap, out of scope for a plain-FS engine. What IS real
-(r11): ``compact_store`` folds committed batch partitions into one, so
-the store read stops paying one parquet footer per historical batch —
-the maintenance hook every writer here shares. Greedy-by-id
-within a batch can over-drop on chains (A~B~C, A≁C drops both B and C);
-sequential greedy would keep C but needs a per-doc loop — the standard
-large-scale trade (same choice as the batch min-id canonicalization).
+100 TB notes: the join is keyed on (band_id, band_key), so its cost is
+the new batch's band rows plus ONE scan of the whole signature store,
+every batch — the store scan grows with history even though the batch
+does not. The next step is a store laid out by band bucket, so the
+history side reads only the buckets the batch's keys hash to; at real
+scale that is a bucketed table (or Delta/Iceberg with a band-key
+z-order). Spark bucketing needs ``saveAsTable`` into a metastore, whose
+overwrite semantics do not compose with the per-partition
+``batch_id=N`` replay guard these writers rely on — a table-format
+store (Delta/Iceberg MERGE with a transaction log) is the production
+swap, out of scope for a plain-FS engine. What IS real (r11):
+``compact_store`` folds committed batch partitions into one, so the
+store read stops paying one parquet footer per historical batch — the
+maintenance hook every writer here shares. Greedy-by-id within a batch
+can over-drop on chains (A~B~C, A≁C drops both B and C); sequential
+greedy would keep C but needs a per-doc loop — the standard large-scale
+trade (same choice as the batch min-id canonicalization).
 """
 
 from __future__ import annotations
@@ -57,61 +74,16 @@ from __future__ import annotations
 import os
 import shutil
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from realtime_market_data_pipeline_spark.operators.dedup import (
-    band_key_rows,
+    band_structs_sql,
     minhash_signature,
 )
 from realtime_market_data_pipeline_spark.streaming.sinks import BatchWriter
-
-_SIG = "mh{i}"
-
-
-def _est_jaccard(num_hashes: int) -> F.Column:
-    """Fraction of agreeing minhash components between an `n.`-prefixed and
-    an `o.`-prefixed signature row."""
-    agree = sum(
-        F.when(F.col(f"n.mh{i}") == F.col(f"o.mh{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
-    return agree / F.lit(float(num_hashes))
-
-
-def _dup_ids_against(
-    new_sigs: DataFrame,
-    old_sigs: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    band_size: int,
-    threshold: float,
-    in_batch: bool,
-) -> DataFrame:
-    """ids of new docs whose signature est-Jaccard ≥ threshold against any
-    doc in ``old_sigs`` (restricted to lower ids when ``in_batch``)."""
-    nb = band_key_rows(new_sigs, id_col, num_hashes, band_size).select(
-        F.col(id_col).alias("new_id"), "band_id", "band_key"
-    )
-    ob = band_key_rows(old_sigs, id_col, num_hashes, band_size).select(
-        F.col(id_col).alias("old_id"), "band_id", "band_key"
-    )
-    cand = nb.join(ob, ["band_id", "band_key"]).select("new_id", "old_id")
-    if in_batch:
-        cand = cand.filter(F.col("old_id") < F.col("new_id"))
-    cand = cand.distinct()
-    scored = (
-        cand.join(
-            new_sigs.select(F.col(id_col).alias("new_id"), "*").drop(id_col).alias("n"),
-            "new_id",
-        )
-        .join(
-            old_sigs.select(F.col(id_col).alias("old_id"), "*").drop(id_col).alias("o"),
-            "old_id",
-        )
-        .filter(_est_jaccard(num_hashes) >= F.lit(threshold))
-    )
-    return scored.select(F.col("new_id").alias(id_col)).distinct()
 
 
 def read_store(
@@ -119,20 +91,32 @@ def read_store(
     store_dir: str,
     before_batch: int | None = None,
     merge_schema: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame | None:
-    """The accepted-signature store as a DataFrame, or None when empty.
+    """The accepted-signature store as a DataFrame, or None when there is
+    none yet: the path is missing, or holds no data file (an empty
+    batch's landing writes none). Any other failure raises —
+    a store that cannot be read is not an empty one, and treating it so
+    would land every later document as new.
     ``before_batch`` excludes partitions ≥ that batch_id (replay guard).
+    ``schema`` is the store's known schema, partition column included; it
+    skips footer inference, and an unreadable file then fails the first
+    job that scans it.
     ``merge_schema`` unions the per-file schemas — needed only by
     readers that tolerate a legacy layout alongside the current one
     (exact_substring_writer's pre-r11 count-less partitions), since a
     plain read takes ONE footer's schema and silently nulls or drops
     the columns the other layout carries."""
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
     try:
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
         df = reader.parquet(store_dir)
-    except Exception:  # noqa: BLE001 — first batch: no store yet
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
         return None
     if before_batch is not None:
         df = df.filter(F.col("batch_id") < before_batch)
@@ -270,69 +254,56 @@ def minhash_dedup_writer(
 ) -> BatchWriter:
     """foreachBatch writer: near-dup-filter each micro-batch against the
     persistent store and append survivors (rows → ``out_dir``, signatures →
-    ``store_dir``, both partitioned by batch_id, dynamic overwrite)."""
+    ``store_dir``, both partitioned by batch_id, dynamic overwrite). A doc
+    is a dup iff it shares a band with, and agrees on ≥ ``threshold`` of
+    the minhashes of, a stored signature of an earlier batch or any lower
+    id of its own batch — one banded join (module docstring, step 2)."""
+    key = "`" + id_col.replace("`", "``") + "`"
+    mh = [f"mh{i}" for i in range(num_hashes)]
+    bands = f"inline({band_structs_sql(num_hashes, band_size)})"
+    agree = " + ".join(f"CAST(n.{c} = o.{c} AS INT)" for c in mh)
+    match = (
+        "n.band_id = o.band_id AND n.band_key = o.band_key"
+        f" AND (NOT o.in_batch OR o.{key} < n.{key})"
+        f" AND ({agree}) / {float(num_hashes)!r}D >= {float(threshold)!r}D"
+    )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # r15: persist the per-batch signatures — they feed BOTH sides
-        # of the in-batch leg, the history leg, and the store landing;
-        # un-persisted, the shingle+md5 pass re-executed once per
-        # reference per write (same double-execution shape fixed in
-        # semdedup_writer, measured ~2x per-batch there)
+        # persisted: the signatures feed both join sides and the store
+        # landing; un-persisted, the shingle+md5 pass re-runs per use
         sigs = minhash_signature(
             batch_df, text_col, id_col, num_hashes, shingle_k
         ).persist()
         try:
-            dup_hist = None
-            store = read_store(spark, store_dir, before_batch=batch_id)
+            ref = sigs.selectExpr("*", "true AS in_batch")
+            store = read_store(
+                spark, store_dir, before_batch=batch_id,
+                schema=StructType(
+                    [*sigs.schema.fields, StructField("batch_id", IntegerType())]
+                ),
+            )
             if store is not None:
-                dup_hist = _dup_ids_against(
-                    sigs,
-                    store.select(
-                        id_col, *[f"mh{i}" for i in range(num_hashes)]
-                    ),
-                    id_col,
-                    num_hashes,
-                    band_size,
-                    threshold,
-                    in_batch=False,
+                ref = ref.unionByName(
+                    store.selectExpr(key, *mh, "false AS in_batch")
                 )
-            dup_batch = _dup_ids_against(
-                sigs, sigs, id_col, num_hashes, band_size, threshold,
-                in_batch=True,
-            )
             dups = (
-                dup_batch
-                if dup_hist is None
-                else dup_batch.unionByName(dup_hist)
-            )
-            dups = dups.distinct().persist()
-            survivors = batch_df.join(dups, id_col, "left_anti")
-            surviving_sigs = sigs.join(dups, id_col, "left_anti")
-
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
+                sigs.selectExpr("*", bands).alias("n")
+                .join(ref.selectExpr("*", bands).alias("o"), F.expr(match))
+                .selectExpr(f"n.{key}")
+                .persist()
             )
             try:
-                (
-                    survivors.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                (
-                    surviving_sigs.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(store_dir)
-                )
+                for rows, path in ((batch_df, out_dir), (sigs, store_dir)):
+                    (
+                        rows.join(dups, id_col, "left_anti")
+                        .withColumn("batch_id", F.lit(batch_id))
+                        .write.mode("overwrite")
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy("batch_id")
+                        .parquet(path)
+                    )
             finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
                 dups.unpersist()
         finally:
             sigs.unpersist()

@@ -8,6 +8,9 @@ last-write-wins sink state must equal the batch result over the full input.
 
 from __future__ import annotations
 
+import os
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -973,6 +976,195 @@ def test_streaming_minhash_dedup_across_batches(spark, tmp_path):
     assert accepted() == {1, 2, 5}
     st2 = spark.read.parquet(store)
     assert {r.doc_id for r in st2.select("doc_id").collect()} == {1, 2, 5}
+
+
+def _words(seed: int, n: int = 30) -> list[str]:
+    r = random.Random(seed)
+    return [
+        f"{r.choice('bcdfg')}{r.choice('aeiou')}{r.choice('klmnp')}"
+        f"{r.randrange(100)}"
+        for _ in range(n)
+    ]
+
+
+def _swap(words: list[str], *edits: tuple[int, str]) -> list[str]:
+    out = list(words)
+    for pos, w in edits:
+        out[pos] = w
+    return out
+
+
+def _minhash_writer_reference(sigs, batches, threshold):
+    """Pure-Python form of the MinHash writer's rule. ``sigs`` maps id ->
+    16 minhashes (docs too short to shingle have none); ``batches`` is
+    the (batch_id, ids) call sequence, replays included. A doc is a dup
+    iff some reference signature shares a full 4-hash band with it and
+    agrees on >= threshold of its minhashes; the references are the
+    stored signatures of batches < batch_id, and every lower id of the
+    same batch, dup or not. Returns ({batch: accepted ids}, {batch:
+    stored (id, sig)})."""
+    accepted, stored = {}, {}
+    for b, ids in batches:
+        hist = [r for sb, rows in stored.items() if sb < b for r in rows]
+        keep = []
+        for i in ids:
+            s = sigs.get(i)
+            refs = hist + [(j, sigs[j]) for j in ids if j < i and j in sigs]
+            if s is not None and any(
+                any(s[k:k + 4] == t[k:k + 4] for k in range(0, 16, 4))
+                and sum(x == y for x, y in zip(s, t)) / 16.0 >= threshold
+                for _, t in refs
+            ):
+                continue
+            keep.append(i)
+        accepted[b] = set(keep)
+        stored[b] = [(i, sigs[i]) for i in keep if i in sigs]
+    return accepted, stored
+
+
+def test_minhash_dedup_writer_matches_python_reference(spark, tmp_path):
+    """Decision parity: three batches and a replay through the writer
+    land exactly the ids and store rows that the pure-Python rule picks
+    from the same signatures — exact and near dups in-batch and across
+    batches, an A~B~C chain with A≁C (greedy-by-id drops B and C),
+    docs too short to shingle (accepted, no signature stored)."""
+    from realtime_market_data_pipeline_spark.operators.dedup import (
+        minhash_signature,
+    )
+    from realtime_market_data_pipeline_spark.streaming import dedup as sdedup
+
+    th = 0.7
+    a = _words(30)
+    b = _swap(a, (8, "xchg1"))
+    c = _swap(b, (20, "xchg2"), (21, "xchg3"))
+    u = {k: _words(100 + k) for k in range(1, 6)}
+    texts = {
+        1: a, 2: b, 3: c, 4: u[1], 5: u[1], 6: u[2],
+        7: _swap(u[2], (10, "near7")), 8: ["hi", "there"], 9: u[3],
+        10: u[3], 11: _swap(u[2], (15, "near11")), 12: u[4],
+        13: _swap(u[4], (6, "near13")), 14: b, 15: None,
+        16: c, 17: u[5], 18: u[5], 19: _swap(u[1], (5, "near19")),
+    }
+    texts = {i: None if t is None else " ".join(t) for i, t in texts.items()}
+    batches = [(0, range(1, 10)), (1, range(10, 16)), (2, range(16, 20))]
+    schema = "doc_id long, text string"
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    writer = sdedup.minhash_dedup_writer(store, out, threshold=th)
+    calls = batches + [batches[-1]]  # replay of the last batch
+    for bid, ids in calls:
+        writer(
+            spark.createDataFrame([(i, texts[i]) for i in ids], schema), bid
+        )
+
+    mh = [f"mh{i}" for i in range(16)]
+    sigs = {
+        r.doc_id: tuple(r[c] for c in mh)
+        for r in minhash_signature(
+            spark.createDataFrame(list(texts.items()), schema)
+        ).collect()
+    }
+    want_acc, want_store = _minhash_writer_reference(
+        sigs, [(bid, list(ids)) for bid, ids in calls], th
+    )
+
+    def est(i, j):
+        return sum(x == y for x, y in zip(sigs[i], sigs[j])) / 16.0
+
+    # the chain the data is built to exercise
+    assert est(1, 2) >= th and est(2, 3) >= th and est(1, 3) < th
+    assert 8 not in sigs and 15 not in sigs
+    assert want_acc == {
+        0: {1, 4, 6, 8, 9}, 1: {12, 15}, 2: {16, 17},
+    }
+
+    got_acc = {}
+    for r in spark.read.parquet(out).select("batch_id", "doc_id").collect():
+        got_acc.setdefault(r.batch_id, set()).add(r.doc_id)
+    assert got_acc == want_acc
+    got_store = sorted(
+        (r.batch_id, r.doc_id, tuple(r[c] for c in mh))
+        for r in spark.read.parquet(store).collect()
+    )
+    assert got_store == sorted(
+        (bid, i, s) for bid, rows in want_store.items() for i, s in rows
+    )
+
+
+def test_minhash_dedup_writer_per_write_overwrite_and_job_count(
+    spark, tmp_path, monkeypatch
+):
+    """The MinHash writer overwrites per write, never through the session
+    conf, and a replayed batch rewrites only its own batch_id partition.
+    A steady-state call (history present, one dup) runs a pinned number
+    of Spark jobs, counted by job group: one banded join, then two
+    landing writes — 10, or 11 when AQE, which submits independent
+    query stages from its own threads, runs one shuffle stage in a job
+    of its own (seen in ~1 call in 13 under CPU contention). 20-23
+    before the join was fused."""
+    from realtime_market_data_pipeline_spark.streaming import dedup as sdedup
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    conf_sets = []
+    real_set = spark.conf.set
+    monkeypatch.setattr(
+        spark.conf, "set", lambda k, v: (conf_sets.append(k), real_set(k, v))
+    )
+    sc = spark.sparkContext
+    group = f"w:minhash_dedup_writer:{tmp_path.name}"
+    try:
+        store, out = str(tmp_path / "store"), str(tmp_path / "out")
+        writer = sdedup.minhash_dedup_writer(store, out)
+        schema = "doc_id long, text string"
+
+        def docs(lo, copy_of):
+            rows = [(i, " ".join(_words(i))) for i in range(lo, lo + 4)]
+            rows.append((lo + 4, " ".join(_words(copy_of))))
+            return spark.createDataFrame(rows, schema)
+
+        writer(docs(0, 0), 0)
+        writer(docs(10, 1), 1)
+        assert spark.conf.get(key) == "static"
+        sc.setJobGroup(group, "steady-state minhash_dedup_writer call")
+        try:
+            writer(docs(20, 2), 1)  # replay of batch 1, other content
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert spark.conf.get(key) == "static"
+
+        def landed(d):
+            rows = spark.read.parquet(d).select("batch_id", "doc_id")
+            return sorted((r.batch_id, r.doc_id) for r in rows.collect())
+
+        want = [(0, i) for i in range(4)] + [(1, i) for i in range(20, 24)]
+        assert landed(out) == want
+        assert landed(store) == want
+        assert key not in conf_sets
+        assert n_jobs in (10, 11), n_jobs
+    finally:
+        real_set(key, before)
+
+
+def test_minhash_dedup_writer_raises_on_corrupt_store(spark, tmp_path):
+    """A store file that cannot be read fails the writer: it must not be
+    taken for an empty store, which would land every later document as
+    new. Nothing of the failed batch lands."""
+    from realtime_market_data_pipeline_spark.streaming import dedup as sdedup
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    writer = sdedup.minhash_dedup_writer(store, out)
+    schema = "doc_id long, text string"
+    writer(spark.createDataFrame([(1, " ".join(_words(1)))], schema), 0)
+    with open(os.path.join(store, "batch_id=0", "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="parquet|FAILED_READ_FILE"):
+        writer(spark.createDataFrame([(2, " ".join(_words(2)))], schema), 1)
+    assert [d for d in os.listdir(out) if d.startswith("batch_id=")] == [
+        "batch_id=0"
+    ]
+    assert not os.path.exists(os.path.join(store, "batch_id=1"))
 
 
 def test_streaming_embedding_dedup_across_batches(spark, tmp_path):
