@@ -10953,488 +10953,6 @@ _REGISTRY_PRIORITY = [
     "topk_per_type",
 ]
 
-_REGISTRY_PRIORITY_R14 = [
-    # r14 WINDOW (staleness-first with changed-code priority; post-r13
-    # distribution over the 195-query registry per the r13 verdict:
-    # r13 x50, r12 x45, r11 x48, r10 x43 + 9 never-adjudicated late-r13
-    # rows. The r13 verdict's authoritative arithmetic: 9 leads + 43
-    # r10-stale candidates = 52 for 50 slots BEFORE any changed-code.
-    #
-    # FRESHNESS SLO (unchanged): zero never-adjudicated rows older than
-    # one round, zero rows older than 3 rounds at their window (two
-    # judge-named exceptions this round, see (4)), changed-code rows
-    # window immediately regardless of age.
-    #
-    # (1) the NINE late-r13 registrations that have never been
-    # driver-adjudicated (r13 verdict #1 — non-negotiable leads, in
-    # the staged order). multimodal_pair_alignment is ALSO
-    # changed-code this round (image_hist_embed clamps the overflow
-    # bincount bucket when n_bins does not divide 256 — the certified
-    # dims=16 path divides 256, values bit-identical) and so is
-    # sequence_layout_256 (pack_layout gained the NULL-text zero-token
-    # guard — the documents corpus has no NULL text, values
-    # identical); doc_curation_funnel's composition includes the
-    # r14-fixed mixture_sample (NULL-domain routing — categories are
-    # never NULL in the corpus, values identical):
-    "multimodal_pair_alignment",
-    "sequence_layout_256",
-    "doc_stratified_sample",
-    "embedding_bitext_margin",
-    "online_classifier_gate_fold",
-    "online_c4_gate_fold",
-    "doc_curation_funnel",
-    "embedding_hard_negatives",
-    "doc_shard_assignment",
-    # (2) CHANGED-CODE re-certs — the three r13-certified rows whose
-    # operator functions the r14 advice fixes touch (the r13
-    # "cheap insurance slots" discipline: the certified corpora hit
-    # none of the new NULL routes, so values are expected identical,
-    # but the functions changed and their rows re-window):
-    # - doc_perplexity_buckets — perplexity_buckets now orders
-    #   asc_nulls_last (ANSI/DuckDB parity on raw input);
-    # - doc_mixture_sample — mixture_sample routes NULL-domain rows
-    #   through the unknown-domain kept=false path via a sentinel
-    #   histogram/join key instead of dropping them in the inner join;
-    # - sequence_packing_256 — pack_documents (like pack_layout)
-    #   gained the NULL-text zero-token guard (the c4_rules
-    #   convention; token_count(NULL) = F.size(NULL) = -1 would shift
-    #   every later doc's offsets):
-    "doc_perplexity_buckets",
-    "doc_mixture_sample",
-    "sequence_packing_256",
-    # (3) the r10-stale rows at the 4-round ceiling (r13 verdict #2):
-    # the five displaced spine rows FIRST, then word_counts_top100
-    # (displaced from r13's top-ups, untouched token-count tree),
-    # then the ANN lifecycle, graph, behavior, sketch, decode
-    # families — 38 of the 43 r10 rows; the five spilled ones are in
-    # (4):
-    "events_time_range",
-    "q8_market_share",
-    "q13_customer_distribution",
-    "q21_sole_returned_supplier",
-    "range_join_event_sessions",
-    "word_counts_top100",
-    "embedding_ann_ivf",
-    "embedding_ann_ivf_persisted",
-    "embedding_ann_ivfpq",
-    "embedding_ann_lsh",
-    "embedding_ann_pq",
-    "embedding_bucket_pairs",
-    "embedding_centroids",
-    "embedding_component_stats",
-    "embedding_cosine_topk",
-    "pagerank_trade_graph",
-    "hits_trade_authorities",
-    "funnel_view_click_purchase",
-    "heavy_hitters_topk",
-    "multimodal_decode",
-    "multimodal_decode_jpeg",
-    "multimodal_resize",
-    "multimodal_video_frames",
-    "cube_brand_size",
-    "doc_chunks_40t_stride30",
-    "doc_embed_hash16",
-    "doc_repetition_scores",
-    "doc_text_normalized",
-    "events_distribution_ranks",
-    "events_lag_lead_rank",
-    "grouping_sets_flag_status",
-    "mixture_weights_by_source",
-    "quality_stratified_sample",
-    "running_revenue_per_supplier",
-    "scd2_event_type_intervals",
-    "stratified_sample_events",
-    "trailing_7d_revenue",
-    "value_percentiles_by_type",
-    # (4) SPILLED to slots 51-55 — NON-NEGOTIABLE r15 LEADS, each 5
-    # rounds stale at its r15 window (the only rows ever past the
-    # 4-round ceiling, each with written justification):
-    # - multimodal_decode_png + multimodal_decode_flac: the two the
-    #   r13 verdict itself named for spilling — their shared decode
-    #   path stays exercised in-window via multimodal_decode,
-    #   multimodal_decode_jpeg, multimodal_resize and
-    #   multimodal_video_frames; jpeg.py/flac.py/multimodal.py decode
-    #   code untouched this round;
-    # - event_transitions + retention_cohorts_weekly: displaced by
-    #   two of the three changed-code re-certs in (2) per the r13
-    #   verdict's own rule ("displace from the behavior/sketch tail
-    #   with written justification — never from the leads");
-    #   behavior.py is untouched since r10 and stays exercised
-    #   in-window by funnel_view_click_purchase;
-    # - approx_percentiles_contract: displaced by the third re-cert;
-    #   a self-contained queries.py body on built-in percentile
-    #   functions — no operator-module dependency at all, body
-    #   untouched since r10; sketches.py stays exercised in-window by
-    #   heavy_hitters_topk:
-    "multimodal_decode_png",
-    "multimodal_decode_flac",
-    "event_transitions",
-    "retention_cohorts_weekly",
-    "approx_percentiles_contract",
-]
-
-_REGISTRY_PRIORITY_R13 = [
-    # r13 WINDOW (staleness-first with changed-code priority; post-r12
-    # distribution over the now-180-query registry per the r12 verdict:
-    # r12 x50, r11 x44, r10 x44, r9 x26 + 4 never-adjudicated late-r12
-    # rows + 4 new-r13 rows).
-    #
-    # FRESHNESS SLO (unchanged): zero never-adjudicated rows older than
-    # one round, zero rows older than 3 rounds at their window,
-    # changed-code rows window immediately regardless of age.
-    #
-    # (1) the FOUR late-r12 registrations that have never been
-    # driver-adjudicated (r12 verdict #1 — non-negotiable leads).
-    # embedding_random_projection is ALSO changed-code this round (the
-    # perfect-square guard relaxed to any out_dim — values at the
-    # certified out_dim=16 are bit-identical, sqrt(16) == 4.0):
-    "dedup_priority_canonical",
-    "embedding_random_projection",
-    "multimodal_audio_quality",
-    "multimodal_scene_cuts",
-    # (2) the FOUR new r13 registrations (never adjudicated):
-    # - online_dsir_gate_fold — batch certification twin of the DSIR
-    #   online gate (r12 verdict #2): persisted dsir_fit model,
-    #   median-rank offline threshold calibration, 3+1-batch fold
-    #   through the actual writer, exact (doc_id, n_grams, log_w,
-    #   kept) twin incl. the NULL-text reject route;
-    # - online_full_gopher_gate_fold — the full Gopher gate
-    #   (structural JOIN repetition per batch) under the driver hash
-    #   (r12 verdict #3): composed %8+%9 decorations, per-family
-    #   failure counts, accumulated == batch-operator equivalence;
-    # - text_ingest_warc_file — the multi-record .warc(.gz) file walk
-    #   (r12 verdict #4): Content-Length-framed split + parse with
-    #   (doc_id, record_idx) keys, gzip round-trip stripe, truncated
-    #   trailing record quarantine;
-    # - dedup_minhash_priority — the MinHash family routed through
-    #   canonicalize_by_priority (r12 verdict #5): verified pairs ->
-    #   connected components -> keep-best-priority, recursive-CTE CC
-    #   replay in the oracle:
-    "online_dsir_gate_fold",
-    "online_full_gopher_gate_fold",
-    "text_ingest_warc_file",
-    "dedup_minhash_priority",
-    # (3) CHANGED-CODE re-certs (r13 edits, all r12-advice fixes):
-    # hash_hamming_pairs drops the band key before the candidate union
-    # (multimodal.py — heterogeneous >=64-bit struct bands now legal),
-    # which is IN the plan of every hamming consumer, so all three
-    # perceptual-dedup rows re-window (the r12 verdict's #3 asked for
-    # the two narrow-path rows regardless); parse_warc gained the
-    # NULL-payload quarantine route and extra_cols passthrough
-    # (text_ingest_warc); gopher_repetition gained the NULL-text guard
-    # and its oracle the uncapped per-row gram positions + the
-    # _o_gopher_rep_parts factor-out (doc_gopher_repetition);
-    # semdedup/lsh_bucket_dedup gained the keep_priority_col branch —
-    # their default-path expression trees are unchanged, but under the
-    # changed-function discipline their certifying rows take cheap
-    # insurance slots:
-    "multimodal_dedup_dhash_wide",
-    "multimodal_dedup_dhash",
-    "dedup_audio_fingerprint",
-    "text_ingest_warc",
-    "doc_gopher_repetition",
-    "dedup_semantic_semdedup",
-    "dedup_embedding_lsh",
-    # (4) the TWENTY-SIX r9 rows at 4 rounds stale — the r12 spillover,
-    # non-negotiable this round (r12 verdict #1 / What's wrong #2):
-    "ohlc_rollup_1m_1h",
-    "pivot_last_daily",
-    "realized_vol_1d",
-    "dedup_clusters",
-    "bollinger_breach_stats",
-    "counter_agg_1h",
-    "date_parts_orders",
-    "distinct_counts",
-    "ema_macd_daily",
-    "gapfill_interpolate_1m",
-    "gapfill_locf_1m",
-    "json_props_stats",
-    "max_drawdown_per_symbol",
-    "pairwise_return_corr",
-    "props_key_counts",
-    "region_revenue",
-    "rollup_returnflag_status",
-    "rsi_14_daily",
-    "sequence_packing_256",
-    "setop_active_both_years",
-    "setop_lapsed_customers",
-    "state_agg_user_event",
-    "stochastic_14_3",
-    "string_funcs_part",
-    "twap_1h",
-    "unpivot_lineitem_measures",
-    # (5) the FIVE new r13 operator rows (never adjudicated — the
-    # never-adjudicated-rows-never-wait-a-round rule, the r12
-    # precedent of new rows displacing top-ups with justification):
-    # - multimodal_image_quality — image quality gating (completes
-    #   the audio/video/image modality triad; LAION-style pre-filter,
-    #   exact /360-safe arithmetic twin over planted BMPs);
-    # - doc_c4_rules — the C4 line-rule cleanup family (Raffel 2020
-    #   §2.2: terminal punctuation, >=3 words, javascript/cookie line
-    #   drops, sentence floor + badword/lorem/brace page gates,
-    #   decorated-corpus exact twin, zero-shuffle codegen);
-    # - doc_quality_classifier — hashed linear classifier APPLY (the
-    #   GPT-3/CCNet discriminative gate; 4096-row broadcast model,
-    #   exact integer margins, odd-denominator 6-dp mean, NULL-text
-    #   route stripe);
-    # - doc_perplexity_buckets — CCNet head/middle/tail thirds per
-    #   language over the certified bigram-LM scores (exact integer
-    #   ceiling cuts, id tie-breaks);
-    # - doc_mixture_sample — temperature/domain mixture sampling
-    #   (offline rational weights, exact u48 integer membership,
-    #   unknown-domain route):
-    "multimodal_image_quality",
-    "doc_c4_rules",
-    "doc_quality_classifier",
-    "doc_perplexity_buckets",
-    "doc_mixture_sample",
-    # - multimodal_dedup_video — perceptual video near-dup (frame-
-    #   signature sets through minhash_sig_sets_from_tokens into the
-    #   certified LSH+Jaccard machinery; planted byte-identical copy
-    #   clips, full banded replay in the oracle):
-    "multimodal_dedup_video",
-    # (6) top-up: 3 oldest-r10 rows on modules r13 DOES touch
-    # (touched-module-never-spills: multimodal.py gained the image-
-    # quality family + video near-dup, text.py gained
-    # c4/classifier/buckets/mixture, dedup.py gained
-    # minhash_sig_sets_from_tokens — all additive, but their
-    # certifying rows take the slots). word_counts_top100 spills to
-    # the r14 leads with justification: its token-count expression
-    # tree is untouched by the r13 text.py additions, each of which
-    # carries its OWN certifying row in this window:
-    "multimodal_decode_gif",
-    "doc_boilerplate_removal",
-    "dedup_exact_substrings",
-    # (7) spillover (slots 51+), all r10-green on modules r13 does NOT
-    # touch, displaced with justification: events_time_range +
-    # q8_market_share + q13_customer_distribution +
-    # q21_sole_returned_supplier + range_join_event_sessions (the five
-    # cheap r10 spine rows the five new operator rows displaced —
-    # readside.py, temporal.py, and their own query bodies untouched
-    # this round; they MUST open r14 right after any never-adjudicated
-    # or changed-code rows); the ANN lifecycle family
-    # (embedding_ann_ivfpq/_pq/_ivf_persisted/_ivf_appended sit on the
-    # similarity.py ANN path, untouched — the r13 similarity.py edits
-    # are random_project and the keep_priority_col branches, certified
-    # in-window by embedding_random_projection / dedup_minhash_priority
-    # / dedup_semantic_semdedup / dedup_embedding_lsh), the graph
-    # family (pagerank/HITS on graph.py, untouched; the CC path IS
-    # re-certified in-window via dedup_clusters + the two priority
-    # rows), behavior family (funnel/transitions/retention on
-    # behavior.py, untouched), heavy_hitters pair (sketches.py,
-    # untouched), running_revenue_per_supplier (readside.py rows
-    # already take 10 in-window slots via the r9 group),
-    # text_ingest_gzip_quarantine (the decompress router is exercised
-    # in-window by text_ingest_warc_file's gzip stripe). They MUST
-    # open the r14 window after any never-adjudicated/changed-code
-    # rows.
-]
-
-_REGISTRY_PRIORITY_R12 = [
-    # r12 WINDOW (staleness-first; post-r11 distribution per the r11
-    # verdict over the now-168-query registry: r11 x50, r10 x44,
-    # r9 x49, r8 x15 + 3 late-r11 never-adjudicated + 4 new-r12 rows).
-    #
-    # FRESHNESS SLO (unchanged): 168 queries / 50-slot window -> the
-    # 3-round max-staleness floor stands. Budget: zero
-    # never-adjudicated rows older than one round, zero rows older
-    # than 3 rounds at their window, changed-code rows window
-    # immediately regardless of age.
-    #
-    # (1) the FOUR new r12 registrations (never adjudicated):
-    # - multimodal_dedup_dhash_wide — the 256-bit multi-word banding
-    #   path under the driver hash (r11 verdict #2): exact integer-SQL
-    #   replay of pixels -> bits -> two's-complement word pack ->
-    #   per-word bit_count hamming;
-    # - dedup_semantic_semdedup_kmeans — the SemDeDup centers
-    #   production form tied to the certified cluster_col reduction
-    #   (r11 verdict #3);
-    # - online_quality_gate_fold / online_semdedup_fold — batch
-    #   certification twins of the r11 online writers (r11 verdict
-    #   #4), exact split counts / exact accepted-set arithmetic:
-    "multimodal_dedup_dhash_wide",
-    "dedup_semantic_semdedup_kmeans",
-    "online_quality_gate_fold",
-    "online_semdedup_fold",
-    # - doc_dsir_weights — DSIR importance weights (Xie 2023), new
-    #   r12 operator, exact value twin incl. the deterministic top-25%
-    #   selection (displaces ohlc_rollup_1m_1h to spillover —
-    #   operators/rollup.py is untouched this round);
-    # - doc_gopher_repetition — the Gopher REPETITION filter family
-    #   (Rae 2021 Table A1: dup line/para fractions + n-gram coverage),
-    #   new r12 operator, exact decorated-corpus twin (displaces
-    #   pivot_last_daily to spillover — readside.py untouched):
-    # - text_ingest_warc — WARC crawl-record ingestion (wrap + parse +
-    #   four fault stripes), new r12 operator, exact value twin
-    #   (displaces realized_vol_1d to spillover — features.py
-    #   untouched this round):
-    # - url_domain_filter — URL/domain source filtering (UT1-style
-    #   blocklist + host features), new r12 operator, exact arithmetic
-    #   twin (displaces dedup_clusters to spillover — its
-    #   pointer-jumping CC path in graph.py/dedup.py is untouched):
-    "doc_dsir_weights",
-    "doc_gopher_repetition",
-    "text_ingest_warc",
-    "url_domain_filter",
-    # (2) the THREE late-r11 registrations that have never been
-    # driver-adjudicated (r11 verdict #1 — non-negotiable leads).
-    # doc_gopher_rules is ALSO changed-code this round (the decoration
-    # Columns factored into _gopher_decorated, value-identical,
-    # shared with online_quality_gate_fold):
-    "dedup_semantic_semdedup",
-    "doc_gopher_rules",
-    "decontamination_fuzzy",
-    # (3) CHANGED-CODE re-certs: the staged lsh_bucket_dedup norm
-    # hoist landed (one fold + one division per candidate pair, same
-    # expression tree as cosine() so values are bit-identical —
-    # strict-reverified at all three SFs), so its certifying row
-    # windows. NOTE the scope of the other r12 code changes:
-    # _word_band_expr gained a >=64-bit-band struct path (advice fix),
-    # but multimodal_dedup_dhash / dedup_audio_fingerprint run the
-    # 64-bit SINGLE-WORD branch that never calls _word_band_expr, and
-    # the <64-bit multiword branch is expression-identical — the wide
-    # rows leading this window are the only executors of the new code.
-    # The streaming/dedup.py + streaming/curation.py advice fixes are
-    # writer-family code with no batch oracle besides the new fold
-    # rows above:
-    "dedup_embedding_lsh",
-    # (4) the FIFTEEN r8 rows displaced in r11 — 4 rounds old, past
-    # the floor, non-negotiable this round (r11 verdict #1):
-    "atr_14_daily",
-    "beta_vs_market_daily",
-    "copurchase_brand_pairs",
-    "equidepth_bins_value",
-    "events_value_drift_psi",
-    "events_value_histogram",
-    "inverted_index_postings",
-    "kmv_jaccard_pairs",
-    "point_in_time_enrich",
-    "regex_extract_brands",
-    "seasonal_baseline_backtest",
-    "sequence_pattern_counts",
-    "stats_price_quantity",
-    "vwap_brand_month",
-    "zscore_outlier_events",
-    # (5) top-up: 27 of the 49 r9 rows (exactly at the 3-round floor).
-    # Touched-module rows first — multimodal.py changed (wide plants +
-    # _word_band_expr), so its three r9 rows never spill; then the
-    # dedup/text/similarity families (operators/similarity.py and
-    # queries.py changed this round), then the features spine
-    # (operators/features.py sits under most rounds' edits):
-    "multimodal_features",
-    "multimodal_quarantine_decode",
-    "multimodal_quarantine_frames",
-    "curation_pipeline",
-    "decontamination_8gram",
-    "decontamination_bloom",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash32",
-    "dedup_edit_distance",
-    "hybrid_search_rrf",
-    "bm25_top20",
-    "tfidf_top3_terms",
-    "doc_lang_id",
-    "doc_quality_scores",
-    "doc_lm_scores",
-    "doc_token_stats",
-    "doc_fingerprint",
-    "pii_scrub",
-    "features_tumbling_1h",
-    "features_tumbling_1d",
-    "features_sliding_6h_1h",
-    # (6) spillover (slots 51+): the 22 remaining r9 rows plus
-    # ohlc_rollup_1m_1h, pivot_last_daily, realized_vol_1d, and
-    # dedup_clusters (displaced by the four new r12 operator rows;
-    # rollup.py, readside.py, features.py and the CC path untouched
-    # this round) — 4 rounds
-    # old at r12 close, displaced with justification: every one is a
-    # single-operator row on modules git diff shows r12 did NOT touch
-    # (quant.py: bollinger_breach_stats, ema_macd_daily, rsi_14_daily,
-    # stochastic_14_3, max_drawdown_per_symbol, pairwise_return_corr,
-    # twap_1h; readside/functions: counter_agg_1h, date_parts_orders,
-    # distinct_counts, json_props_stats, props_key_counts,
-    # region_revenue, rollup_returnflag_status, string_funcs_part,
-    # unpivot_lineitem_measures, state_agg_user_event; temporal.py:
-    # gapfill_interpolate_1m, gapfill_locf_1m; queries.py setop pair;
-    # text.py sequence_packing_256 — text.py is also untouched this
-    # round). They MUST open the r13 window:
-    "ohlc_rollup_1m_1h",
-    "pivot_last_daily",
-    "realized_vol_1d",
-    "dedup_clusters",
-    "bollinger_breach_stats",
-    "counter_agg_1h",
-    "date_parts_orders",
-    "distinct_counts",
-    "ema_macd_daily",
-    "gapfill_interpolate_1m",
-    "gapfill_locf_1m",
-    "json_props_stats",
-    "max_drawdown_per_symbol",
-    "pairwise_return_corr",
-    "props_key_counts",
-    "region_revenue",
-    "rollup_returnflag_status",
-    "rsi_14_daily",
-    "sequence_packing_256",
-    "setop_active_both_years",
-    "setop_lapsed_customers",
-    "state_agg_user_event",
-    "stochastic_14_3",
-    "string_funcs_part",
-    "twap_1h",
-    "unpivot_lineitem_measures",
-]
-
-# ---------------------------------------------------------------------------
-# STAGED r15 PLAN (staleness-first). Post-r14 distribution over the
-# 195-query registry, assuming the r14 window above goes green:
-# r14 x50, r13 x47 (the r13 window minus the three rows re-certified
-# in r14 as changed-code), r12 x45, r11 x48, r10 x5 (the five spilled
-# rows pinned at slots 51-55 above — the ONLY rows ever past the
-# 4-round ceiling, each justified inline). The r15 window MUST be, in
-# order: (1) whatever code changes in r15 (changed-code priority
-# outranks staleness); (2) the FIVE spilled rows
-# (multimodal_decode_png, multimodal_decode_flac, event_transitions,
-# retention_cohorts_weekly, approx_percentiles_contract) — at 5
-# rounds stale they are non-negotiable leads; (3) the FIVE late-r14
-# registrations below the window (the r13 late-lead pattern, each
-# with individual 3-SF strict receipts; probes/plan pins where the
-# row is an operator): embedding_bitext_margin_lsh +
-# embedding_hard_negatives_ann — the candidate-fed PRODUCTION forms
-# of the two quadratic-certificate miners (the r13 verdict's #5
-# ask), LSH bucket collisions feeding the identical margin/mutual
-# and label-filter + rank + band tails, no nested-loop anywhere in
-# either plan (test_r14_late_row_plan_shapes);
-# online_mixture_gate_fold — the fifth online writer's fold twin
-# (offline-calibrated exact-rational rates, bit-identical integer
-# membership); sequence_layout_nosplit_64 — document-respecting
-# next-fit packing (recursive-CTE oracle);
-# dedup_frequency_capped — duplicate-frequency capping (soft
-# dedup); (4) the 48 r11-stale rows at the 4-round point. BUDGET
-# ARITHMETIC (do this math BEFORE building anything in r15):
-# 5 spilled leads + 5 late-r14 leads + 48 r11 rows = 58 candidates
-# for 50 slots — over-subscribed by 8 even with zero r15
-# changed-code re-certs. Consequences:
-# (a) 8 of the r11 rows must spill to r16 with written
-# justification — choose single-operator rows on modules r14/r15 do
-# not touch, keep every module represented in-window by a sibling,
-# and pin the spills as non-negotiable r16 leads (this round's (4)
-# pattern); (b) r15 edits to already-certified modules are EXPENSIVE
-# — prefer additive new files/functions whose certifying rows are
-# the leads themselves; (c) genuinely new r15 operators register
-# BELOW the window with individual 3-SF strict receipts, becoming
-# r16 leads. Note on TPC-H completeness (carried): the 5 unregistered
-# numbers (q2/q11/q20 need PARTSUPP; q12/q21 need
-# l_shipmode/l_commitdate/l_receiptdate) are structurally impossible
-# on the driver corpus — the 17 registered are every official shape
-# the tables can express; q21's double-correlated-existential PLAN
-# SHAPE is covered by the adapted q21_sole_returned_supplier (r9,
-# driver-certified r10, re-certified r14).
-# ---------------------------------------------------------------------------
-
 
 def _reorder_registry() -> None:
     missing = [n for n in _REGISTRY_PRIORITY if n not in QUERIES]

@@ -14,9 +14,15 @@ coalescePartitions then trims the long tail at runtime).
 
 from __future__ import annotations
 
+import logging
 import os
+from collections import Counter
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+# exception class name -> times release_local_checkpoint swallowed it
+CHECKPOINT_RELEASE_FAILURES: Counter[str] = Counter()
 
 
 def get_spark(
@@ -93,10 +99,21 @@ def release_local_checkpoint(df) -> None:
     superseded checkpoints explicitly — iterative operators (PageRank,
     HITS, connected components) call this the moment a checkpoint's last
     consumer has materialized. The DataFrame is unusable afterwards; a
-    non-checkpoint DataFrame is a no-op."""
+    non-checkpoint DataFrame is a no-op.
+
+    Release is best-effort: a failure leaves the blocks in place, counts
+    the exception class in ``CHECKPOINT_RELEASE_FAILURES`` and logs a
+    warning the first time that class is seen."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — release is best-effort hygiene
-        pass
+    except Exception as e:  # noqa: BLE001 — release is best-effort hygiene
+        name = type(e).__name__
+        CHECKPOINT_RELEASE_FAILURES[name] += 1
+        if CHECKPOINT_RELEASE_FAILURES[name] == 1:
+            _log.warning(
+                "release_local_checkpoint left the blocks in place: %r",
+                e,
+                exc_info=True,
+            )

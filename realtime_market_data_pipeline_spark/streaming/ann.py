@@ -9,9 +9,9 @@ parquet + the corpus CLUSTER-PARTITIONED by nearest centroid). Per
 micro-batch the search touches only the batch's probed buckets — the
 partition filter ``ann_topk_ivf_indexed`` pushes into the scan — so the
 steady-state cost is |batch| x n_probe bucket reads, NOT a corpus scan:
-the cost structure that survives 100 TB. Results land
-batch_id-partitioned with dynamic overwrite so a replayed batch
-rewrites itself (the ``minhash_dedup_writer`` exactly-once pattern).
+the cost structure that survives 100 TB. Results land through
+``streaming.sinks.land`` (the writers' one exactly-once landing
+contract), so a replayed batch rewrites itself.
 
 The codebook loads ONCE at writer construction (driver-bounded k x d
 doubles); the vectors stay on disk and are only ever read through the
@@ -21,7 +21,6 @@ pruned scan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from realtime_market_data_pipeline_spark.operators.similarity import (
     ann_topk_ivf_indexed,
@@ -29,26 +28,7 @@ from realtime_market_data_pipeline_spark.operators.similarity import (
     load_ann_index,
     load_pq_books,
 )
-from realtime_market_data_pipeline_spark.streaming.sinks import BatchWriter
-
-
-def _write_hits_partitioned(hits: DataFrame, out_dir: str, batch_id: int) -> None:
-    """Shared sink tail for the ANN writers: hits land batch_id-
-    partitioned with dynamic overwrite, so a replayed batch rewrites
-    exactly its own partition (the minhash_dedup_writer exactly-once
-    pattern)."""
-    sp = hits.sparkSession
-    prev = sp.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            hits.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-    finally:
-        sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+from realtime_market_data_pipeline_spark.streaming.sinks import BatchWriter, land
 
 
 def ann_search_writer(
@@ -82,7 +62,7 @@ def ann_search_writer(
             vec_col=vec_col,
             query_id_col=query_id_col,
         )
-        _write_hits_partitioned(hits, out_dir, batch_id)
+        land(hits, out_dir, batch_id)
 
     return write
 
@@ -126,6 +106,6 @@ def ann_search_writer_ivfpq(
             vec_col=vec_col,
             query_id_col=query_id_col,
         )
-        _write_hits_partitioned(hits, out_dir, batch_id)
+        land(hits, out_dir, batch_id)
 
     return write

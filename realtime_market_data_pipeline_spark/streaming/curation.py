@@ -8,20 +8,46 @@ rejects in an auditable quarantine table that records WHICH rule fired
 — the same split-and-route shape as the media quarantine routers, at
 the document level.
 
-Writer contract (shared with streaming/dedup.py and streaming/sinks.py):
-rows land in ``<dir>/batch_id=N`` via dynamic-partition overwrite, so a
-replayed micro-batch rewrites itself (exactly-once landing). The gate
-itself is per-row work — Column arithmetic plus, for the repetition
-rules, one row-local Python UDF pass — with zero keyed exchanges
-(plan-pinned for the batch operator), so the stream's per-batch cost is
-one scan of the batch.
+Every gate scores its batch and hands the scored rows and a keep Column
+to ``_route``, which persists them once and lands keepers and rejects
+through ``streaming.sinks.land`` (the writers' one exactly-once landing
+contract). NULL keep routes to rejects, so every input document lands
+exactly once. The gate itself is per-row work — Column arithmetic plus,
+for the repetition rules, one row-local Python UDF pass — with zero
+keyed exchanges (plan-pinned for the batch operator), so the stream's
+per-batch cost is one scan of the batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from realtime_market_data_pipeline_spark.streaming.sinks import BatchWriter
+from realtime_market_data_pipeline_spark.streaming.sinks import BatchWriter, land
+
+
+def _route(
+    scored: DataFrame,
+    keep: Column,
+    batch_id: int,
+    out_dir: str,
+    rejects_dir: str | None,
+) -> None:
+    """Land ``scored`` split by ``keep``: keepers to ``out_dir``, the
+    rest to ``rejects_dir`` when given. NULL keep is a reject — a
+    document with no text has NULL signals, and filtering on a NULL
+    keep would drop it from both tables. The split column is
+    materialized as ``_keep`` (replacing any column of that name) so
+    both writes read it from one persisted relation, and dropped
+    before landing."""
+    routed = scored.withColumn(
+        "_keep", F.coalesce(keep, F.lit(False))
+    ).persist()
+    try:
+        land(routed.filter("_keep").drop("_keep"), out_dir, batch_id)
+        if rejects_dir is not None:
+            land(routed.filter("NOT _keep").drop("_keep"), rejects_dir, batch_id)
+    finally:
+        routed.unpersist()
 
 
 def quality_gate_writer(
@@ -82,36 +108,7 @@ def quality_gate_writer(
                 "keep",
                 F.col("keep_structural") & F.col("keep_repetition"),
             )
-        scored = scored.persist()
-        # NULL-text documents get NULL signals, so keep is NULL — both
-        # filter(keep) and filter(~keep) would drop them from BOTH
-        # tables, silently losing rows from the auditable split. Route
-        # NULL keep to rejects: a document with no text is a reject,
-        # and the NULL signal columns record why.
-        keep3 = F.coalesce(F.col("keep"), F.lit(False))
-        try:
-            # per-write dynamic overwrite: replaces only this batch's
-            # partition without touching the session-global conf, so
-            # concurrent queries on one session never see it flipped
-            (
-                scored.filter(keep3)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-            if rejects_dir is not None:
-                (
-                    scored.filter(~keep3)
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(rejects_dir)
-                )
-        finally:
-            scored.unpersist()
+        _route(scored, F.col("keep"), batch_id, out_dir, rejects_dir)
 
     return write
 
@@ -140,40 +137,10 @@ def c4_gate_writer(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         scored = c4_rules(
             batch_df, text_col=text_col, id_col=id_col, **c4_kwargs
-        ).persist()
-        keep3 = F.coalesce(F.col("keep"), F.lit(False))
-        try:
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    scored.filter(keep3)
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                if rejects_dir is not None:
-                    (
-                        scored.filter(~keep3)
-                        .withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .partitionBy("batch_id")
-                        .parquet(rejects_dir)
-                    )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-        finally:
-            scored.unpersist()
+        )
+        _route(scored, F.col("keep"), batch_id, out_dir, rejects_dir)
 
     return write
 
@@ -214,41 +181,11 @@ def dsir_gate_writer(
             batch_df, model, text_col=text_col, id_col=id_col,
             n_buckets=n_buckets,
         )
-        routed = batch_df.select(id_col, text_col).join(
-            scored, id_col, "left"
-        ).persist()
-        keep3 = F.coalesce(
-            F.col("log_w") >= F.lit(threshold), F.lit(False)
+        _route(
+            batch_df.select(id_col, text_col).join(scored, id_col, "left"),
+            F.col("log_w") >= F.lit(threshold),
+            batch_id, out_dir, rejects_dir,
         )
-        try:
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    routed.filter(keep3)
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                if rejects_dir is not None:
-                    (
-                        routed.filter(~keep3)
-                        .withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .partitionBy("batch_id")
-                        .parquet(rejects_dir)
-                    )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-        finally:
-            routed.unpersist()
 
     return write
 
@@ -292,41 +229,11 @@ def classifier_gate_writer(
             batch_df, weights, text_col=text_col, id_col=id_col,
             n_buckets=n_buckets,
         )
-        routed = batch_df.select(id_col, text_col).join(
-            scored, id_col, "left"
-        ).persist()
-        keep3 = F.coalesce(
-            F.col("score") > F.lit(threshold), F.lit(False)
+        _route(
+            batch_df.select(id_col, text_col).join(scored, id_col, "left"),
+            F.col("score") > F.lit(threshold),
+            batch_id, out_dir, rejects_dir,
         )
-        try:
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    routed.filter(keep3)
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                if rejects_dir is not None:
-                    (
-                        routed.filter(~keep3)
-                        .withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .partitionBy("batch_id")
-                        .parquet(rejects_dir)
-                    )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-        finally:
-            routed.unpersist()
 
     return write
 
@@ -374,10 +281,9 @@ def mixture_gate_writer(
             batch_df[group_col] == rates["domain"],
             "left",
         )
-        kept3 = F.coalesce(
+        kept = (
             sample_key48(id_col, salt).cast(d0) * F.col("den").cast(d0)
-            < F.col("num").cast(d0) * F.lit(2**48).cast(d0),
-            F.lit(False),
+            < F.col("num").cast(d0) * F.lit(2**48).cast(d0)
         )
         p = F.when(
             F.col("num").isNotNull(),
@@ -394,38 +300,8 @@ def mixture_gate_writer(
             F.col(id_col),
             batch_df[group_col],
             p.alias("p_sample"),
-            kept3.alias("_keep"),
-        ).persist()
-        try:
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    routed.filter(F.col("_keep"))
-                    .drop("_keep")
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                if rejects_dir is not None:
-                    (
-                        routed.filter(~F.col("_keep"))
-                        .drop("_keep")
-                        .withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .partitionBy("batch_id")
-                        .parquet(rejects_dir)
-                    )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-        finally:
-            routed.unpersist()
+            kept.alias("_keep"),
+        )
+        _route(routed, F.col("_keep"), batch_id, out_dir, rejects_dir)
 
     return write

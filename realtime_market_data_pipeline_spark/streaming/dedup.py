@@ -9,8 +9,10 @@ docs in the same micro-batch), and remember the survivors' signatures so
 future batches are checked against them. First-accepted-wins — the online
 counterpart of the batch operators' min-id canonicalization.
 
-Dataflow per micro-batch (foreachBatch, same writer contract as
-streaming/sinks.py):
+Every writer here lands through ``streaming.sinks.land``, the writers'
+one exactly-once landing contract, and reads its store with
+``batch_id < current`` (the replay guard). Dataflow per micro-batch of
+the MinHash writer:
 
 1. MinHash signatures of the new docs (``minhash_signature`` — one md5 per
    shingle, codegen'd; docs too short to shingle carry no signature and are
@@ -40,10 +42,8 @@ streaming/sinks.py):
    earlier two-leg plan (a band join, a distinct and two verify joins
    each for history and in-batch, then a union distinct).
 4. Survivors' rows land in ``out_dir/batch_id=N``, their signatures in
-   ``store_dir/batch_id=N`` — both per-write dynamic-partition
-   overwrites (the session conf is never touched), so a replayed batch
-   rewrites itself (exactly-once landing, the
-   ``idempotent_parquet_writer`` pattern). The store read filters
+   ``store_dir/batch_id=N`` (``land``), so a replayed batch rewrites
+   itself. The store read filters
    ``batch_id < current``: a crashed attempt's own partition is invisible
    to its replay, which would otherwise match every doc against its own
    half-written signatures and drop the whole batch. A store that
@@ -83,7 +83,7 @@ from realtime_market_data_pipeline_spark.operators.dedup import (
     band_structs_sql,
     minhash_signature,
 )
-from realtime_market_data_pipeline_spark.streaming.sinks import BatchWriter
+from realtime_market_data_pipeline_spark.streaming.sinks import BatchWriter, land
 
 
 def read_store(
@@ -295,14 +295,7 @@ def minhash_dedup_writer(
             )
             try:
                 for rows, path in ((batch_df, out_dir), (sigs, store_dir)):
-                    (
-                        rows.join(dups, id_col, "left_anti")
-                        .withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("batch_id")
-                        .parquet(path)
-                    )
+                    land(rows.join(dups, id_col, "left_anti"), path, batch_id)
             finally:
                 dups.unpersist()
         finally:
@@ -388,26 +381,11 @@ def embedding_dedup_writer(
         # the whole bucket+verify pipeline (the semdedup_writer
         # double-execution shape, measured ~2x per batch there)
         dups = dups.distinct().persist()
-        survivors = batch_df.join(dups, id_col, "left_anti")
-
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            (
-                survivors.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-            (
-                survivors.select(id_col, vec_col)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(store_dir)
-            )
+            survivors = batch_df.join(dups, id_col, "left_anti")
+            land(survivors, out_dir, batch_id)
+            land(survivors.select(id_col, vec_col), store_dir, batch_id)
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             dups.unpersist()
 
     return write
@@ -522,33 +500,15 @@ def semdedup_writer(
             # write re-executed the whole candidate+verify pipeline
             # (measured: ~2x per-batch write cost)
             dups = dups.distinct().persist()
-            survivors = batch_df.join(dups, id_col, "left_anti")
-            surviving_vecs = vecs.join(dups, id_col, "left_anti")
-
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
             try:
-                (
-                    survivors.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                (
-                    surviving_vecs.select(id_col, vec_col, "cluster")
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id", "cluster")
-                    .parquet(store_dir)
+                land(batch_df.join(dups, id_col, "left_anti"), out_dir, batch_id)
+                land(
+                    vecs.join(dups, id_col, "left_anti").select(
+                        id_col, vec_col, "cluster"
+                    ),
+                    store_dir, batch_id, "cluster",
                 )
             finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
                 dups.unpersist()
         finally:
             vecs.unpersist()
@@ -628,21 +588,7 @@ def decontamination_writer(
                 ),
             )
         )
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                flagged.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        land(flagged, out_dir, batch_id)
 
     return write
 
@@ -726,32 +672,8 @@ def exact_substring_writer(
                 )
             dup_h = total.filter(F.col("c") >= min_count).select("h")
             starts = grams.join(dup_h, "h", "left_semi").select(id_col, "pos")
-            spans = merge_spans(starts, w, id_col=id_col)
-
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    spans.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                (
-                    batch_counts
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(store_dir)
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+            land(merge_spans(starts, w, id_col=id_col), out_dir, batch_id)
+            land(batch_counts, store_dir, batch_id)
         finally:
             grams.unpersist()
 
@@ -860,32 +782,8 @@ def image_dedup_writer(
             .persist()
         )
         try:
-            survivors = batch_df.join(drops, id_col, "left_anti")
-            surviving_hashes = hashes.join(drops, id_col, "left_anti")
-
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    survivors.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
-                (
-                    surviving_hashes.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(store_dir)
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+            for rows, path in ((batch_df, out_dir), (hashes, store_dir)):
+                land(rows.join(drops, id_col, "left_anti"), path, batch_id)
         finally:
             drops.unpersist()
             hashes.unpersist()

@@ -10,11 +10,19 @@ The reference's K1 is append-only INSERT in `update` output mode, so the sink
 table accumulates multiple progressively-updated rows per (window_start,
 symbol) and readers recover last-write-wins (§2.2 "semantic trap"). That
 behavior is reproduced here (``duckdb_append_writer``), and *improved* per
-SURVEY.md §7.2 step 4 with an idempotent variant: each micro-batch writes to a
-``batch_id=N`` parquet subdirectory with dynamic overwrite, so a replayed
-batch overwrites itself instead of double-inserting — exactly-once landing on
-top of at-least-once delivery. At 100 TB the same shape is a Delta/Iceberg
-MERGE; plain partitioned parquet keeps this container-runnable.
+SURVEY.md §7.2 step 4 with an idempotent variant.
+
+The landing contract every online writer shares (this module's
+``idempotent_parquet_writer``, the gate writers in streaming/curation.py,
+the dedup writers in streaming/dedup.py, the ANN writers in
+streaming/ann.py) is ``land``: a micro-batch's rows go to
+``<dir>/batch_id=N`` with a per-write dynamic partition overwrite, so a
+replayed batch rewrites only its own partition instead of
+double-inserting — exactly-once landing on top of at-least-once
+delivery. The overwrite mode is an option of that one write, never the
+session conf, so streaming queries that share a session cannot flip it
+under each other. At 100 TB the same shape is a Delta/Iceberg MERGE;
+plain partitioned parquet keeps this container-runnable.
 """
 
 from __future__ import annotations
@@ -140,27 +148,32 @@ def parquet_append_writer(
     return write
 
 
+def land(df: DataFrame, path: str, batch_id: int, *partition_cols: str) -> None:
+    """Write ``df`` to ``path/batch_id=N`` (then ``partition_cols``
+    below it), replacing only the partitions this write produces: a
+    replayed batch rewrites itself and leaves every other batch as it
+    is. The dynamic overwrite is an option of this write; the session
+    conf is never read or set, so writers sharing a session never see
+    each other's overwrite mode."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", *partition_cols)
+        .parquet(path)
+    )
+
+
 def idempotent_parquet_writer(path: str) -> BatchWriter:
     """T7 improvement: partition the sink by ``batch_id`` and overwrite only
-    the arriving batch's partition (dynamic partitionOverwriteMode). A batch
-    replayed after a crash rewrites `batch_id=N` in place — no double-insert,
-    giving exactly-once output from the checkpointed at-least-once stream.
+    the arriving batch's partition (``land``). A batch replayed after a
+    crash rewrites `batch_id=N` in place — no double-insert, giving
+    exactly-once output from the checkpointed at-least-once stream.
     Distributed write, no driver collect; at real scale swap for a
     Delta/Iceberg MERGE keyed on (window_start, symbol)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        land(batch_df, path, batch_id)
 
     return write
 

@@ -35,3 +35,32 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
         timeout=600,
     )
     assert "ROWS 1" in r.stdout, r.stderr[-3000:]
+
+
+def test_release_local_checkpoint_counts_swallowed_failures(
+    monkeypatch, caplog
+):
+    """A failure inside the best-effort release is counted by exception
+    class and logged once per class; it never reaches the caller."""
+    import logging
+    from collections import Counter
+
+    from realtime_market_data_pipeline_spark import session
+
+    class Unreleasable:
+        @property
+        def _jdf(self):
+            raise RuntimeError("plan is gone")
+
+    monkeypatch.setattr(session, "CHECKPOINT_RELEASE_FAILURES", Counter())
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session.release_local_checkpoint(Unreleasable())
+        session.release_local_checkpoint(Unreleasable())
+        session.release_local_checkpoint(None)
+    assert session.CHECKPOINT_RELEASE_FAILURES == {
+        "RuntimeError": 2,
+        "AttributeError": 1,
+    }
+    warned = [r for r in caplog.records if r.name == session.__name__]
+    assert len(warned) == 2
+    assert "plan is gone" in warned[0].getMessage()

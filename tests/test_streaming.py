@@ -13,6 +13,7 @@ import random
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.conf import RuntimeConfig
 
 from realtime_market_data_pipeline_spark.operators.features import (
     compute_features,
@@ -35,6 +36,38 @@ DET_COLS = [
     "num_ticks",
     "max_event_time_ms",
 ]
+
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+@pytest.fixture(autouse=True)
+def _overwrite_mode_never_set(request):
+    """Every test here runs with a static session overwrite mode and
+    fails if package code sets that conf: online writers overwrite per
+    write (``sinks.land``), so queries sharing a session never see it
+    flipped. Patched on the class, so the session wrappers foreachBatch
+    builds are watched too."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    before = spark.conf.get(OVERWRITE_MODE)
+    spark.conf.set(OVERWRITE_MODE, "static")
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        if key == OVERWRITE_MODE:
+            sets.append(value)
+        return real_set(self, key, value)
+
+    RuntimeConfig.set = spy
+    try:
+        yield
+    finally:
+        RuntimeConfig.set = real_set
+        spark.conf.set(OVERWRITE_MODE, before)
+    assert not sets, f"package code set {OVERWRITE_MODE} to {sets}"
 
 
 @pytest.fixture(scope="module")
@@ -1091,60 +1124,47 @@ def test_minhash_dedup_writer_matches_python_reference(spark, tmp_path):
 
 
 def test_minhash_dedup_writer_per_write_overwrite_and_job_count(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
-    """The MinHash writer overwrites per write, never through the session
-    conf, and a replayed batch rewrites only its own batch_id partition.
-    A steady-state call (history present, one dup) runs a pinned number
-    of Spark jobs, counted by job group: one banded join, then two
-    landing writes — 10, or 11 when AQE, which submits independent
-    query stages from its own threads, runs one shuffle stage in a job
-    of its own (seen in ~1 call in 13 under CPU contention). 20-23
-    before the join was fused."""
+    """Under a static session default (the conf itself is watched by the
+    autouse fixture), a replayed batch of the MinHash writer rewrites
+    only its own batch_id partition. A steady-state call (history
+    present, one dup) runs a pinned number of Spark jobs, counted by
+    job group: one banded join, then two landing writes — 10, or 11
+    when AQE, which submits independent query stages from its own
+    threads, runs one shuffle stage in a job of its own (seen in ~1
+    call in 13 under CPU contention). 20-23 before the join was
+    fused."""
     from realtime_market_data_pipeline_spark.streaming import dedup as sdedup
 
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "static")
-    conf_sets = []
-    real_set = spark.conf.set
-    monkeypatch.setattr(
-        spark.conf, "set", lambda k, v: (conf_sets.append(k), real_set(k, v))
-    )
     sc = spark.sparkContext
     group = f"w:minhash_dedup_writer:{tmp_path.name}"
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    writer = sdedup.minhash_dedup_writer(store, out)
+    schema = "doc_id long, text string"
+
+    def docs(lo, copy_of):
+        rows = [(i, " ".join(_words(i))) for i in range(lo, lo + 4)]
+        rows.append((lo + 4, " ".join(_words(copy_of))))
+        return spark.createDataFrame(rows, schema)
+
+    writer(docs(0, 0), 0)
+    writer(docs(10, 1), 1)
+    sc.setJobGroup(group, "steady-state minhash_dedup_writer call")
     try:
-        store, out = str(tmp_path / "store"), str(tmp_path / "out")
-        writer = sdedup.minhash_dedup_writer(store, out)
-        schema = "doc_id long, text string"
-
-        def docs(lo, copy_of):
-            rows = [(i, " ".join(_words(i))) for i in range(lo, lo + 4)]
-            rows.append((lo + 4, " ".join(_words(copy_of))))
-            return spark.createDataFrame(rows, schema)
-
-        writer(docs(0, 0), 0)
-        writer(docs(10, 1), 1)
-        assert spark.conf.get(key) == "static"
-        sc.setJobGroup(group, "steady-state minhash_dedup_writer call")
-        try:
-            writer(docs(20, 2), 1)  # replay of batch 1, other content
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert spark.conf.get(key) == "static"
-
-        def landed(d):
-            rows = spark.read.parquet(d).select("batch_id", "doc_id")
-            return sorted((r.batch_id, r.doc_id) for r in rows.collect())
-
-        want = [(0, i) for i in range(4)] + [(1, i) for i in range(20, 24)]
-        assert landed(out) == want
-        assert landed(store) == want
-        assert key not in conf_sets
-        assert n_jobs in (10, 11), n_jobs
+        writer(docs(20, 2), 1)  # replay of batch 1, other content
     finally:
-        real_set(key, before)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def landed(d):
+        rows = spark.read.parquet(d).select("batch_id", "doc_id")
+        return sorted((r.batch_id, r.doc_id) for r in rows.collect())
+
+    want = [(0, i) for i in range(4)] + [(1, i) for i in range(20, 24)]
+    assert landed(out) == want
+    assert landed(store) == want
+    assert n_jobs in (10, 11), n_jobs
 
 
 def test_minhash_dedup_writer_raises_on_corrupt_store(spark, tmp_path):
@@ -2824,13 +2844,29 @@ def test_streaming_semdedup_against_persisted_index(spark, tmp_path):
     }
     assert acc1 == set(range(50, 60))  # copies of history dropped
 
-    # replay rewrites itself
+    # replay rewrites itself: under the static session default only the
+    # (batch_id=1, cluster=*) subtree of the store is rewritten
+    def files(batch):
+        root = os.path.join(store, f"batch_id={batch}")
+        return {
+            os.path.join(os.path.relpath(d, root), f)
+            for d, _, fs in os.walk(root)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    b0_files, b1_files = files(0), files(1)
     writer(b1, 1)
     acc1b = {
         r.vec_id
         for r in spark.read.parquet(out).filter("batch_id = 1").collect()
     }
     assert acc1b == acc1
+    assert files(0) == b0_files
+    assert files(1) and not files(1) & b1_files
+    assert {f.split(os.sep)[0] for f in files(1)} == {
+        f.split(os.sep)[0] for f in b1_files
+    }
     st = spark.read.parquet(store)
     assert set(st.columns) == {"vec_id", "embedding", "cluster", "batch_id"}
     assert st.count() == 60
@@ -3118,47 +3154,98 @@ def test_streaming_full_gopher_gate_with_repetition(spark, tmp_path):
     assert {i: True for i in kept} | {i: False for i in dropped} == twin
 
 
-def test_quality_gate_writer_per_write_dynamic_overwrite(
-    spark, tmp_path, monkeypatch
-):
-    """The gate writer overwrites dynamically per write, not by flipping
-    the session conf: the conf is never set and reads the same before
-    and after, and a replayed batch rewrites only its own batch_id
-    partition even when the session default is static overwrite."""
+def test_quality_gate_writer_per_write_dynamic_overwrite(spark, tmp_path):
+    """Under a static session default (the conf itself is watched by the
+    autouse fixture), a replayed batch of the gate writer rewrites only
+    its own batch_id partition in both the keeper and the reject
+    table."""
     from realtime_market_data_pipeline_spark.streaming import curation
 
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "static")
-    conf_sets = []
-    real_set = spark.conf.set
-    monkeypatch.setattr(
-        spark.conf, "set", lambda k, v: (conf_sets.append(k), real_set(k, v))
+    out, rej = str(tmp_path / "out"), str(tmp_path / "rej")
+    writer = curation.quality_gate_writer(
+        out, rej, repetition=True, min_words=3,
+        required_words=("the", "data"),
     )
-    try:
-        out, rej = str(tmp_path / "out"), str(tmp_path / "rej")
-        writer = curation.quality_gate_writer(
-            out, rej, repetition=True, min_words=3,
-            required_words=("the", "data"),
+    good = "the data " + " ".join(f"word{i}" for i in range(8))
+    schema = "doc_id long, text string"
+    writer(spark.createDataFrame([(0, good), (1, "zz")], schema), 0)
+    writer(spark.createDataFrame([(2, good), (3, "zz")], schema), 1)
+    # replay of batch 1 with different content
+    writer(spark.createDataFrame([(4, good), (5, "zz")], schema), 1)
+
+    def landed(d):
+        rows = spark.read.parquet(d).collect()
+        return sorted((r.batch_id, r.doc_id) for r in rows)
+
+    assert landed(out) == [(0, 0), (1, 4)]
+    assert landed(rej) == [(0, 1), (1, 5)]
+
+
+def test_two_writers_share_one_session(spark, tmp_path):
+    """Two online writers land concurrently from two threads of one
+    session whose overwrite default is static (the autouse fixture):
+    each lands two batches and replays one with other rows, and each
+    table then holds exactly its own batch_id partitions and rows. A
+    writer that flipped the session conf could restore static while
+    the other thread writes, and that write would replace the other
+    thread's whole table."""
+    import threading
+
+    from realtime_market_data_pipeline_spark.streaming import curation
+
+    ticks_dir, docs_dir = str(tmp_path / "ticks"), str(tmp_path / "docs")
+    text = (
+        "first good sentence here.\nsecond fine line stays!\n"
+        "third one also stays."
+    )
+
+    def ticks(rows):
+        return spark.createDataFrame(
+            [(i, f"S{i % 3}") for i in rows], "seq long, symbol string"
         )
-        good = "the data " + " ".join(f"word{i}" for i in range(8))
-        schema = "doc_id long, text string"
-        writer(spark.createDataFrame([(0, good), (1, "zz")], schema), 0)
-        assert spark.conf.get(key) == "static"
-        writer(spark.createDataFrame([(2, good), (3, "zz")], schema), 1)
-        # replay of batch 1 with different content
-        writer(spark.createDataFrame([(4, good), (5, "zz")], schema), 1)
-        assert spark.conf.get(key) == "static"
 
-        def landed(d):
-            rows = spark.read.parquet(d).collect()
-            return sorted((r.batch_id, r.doc_id) for r in rows)
+    def docs(rows):
+        return spark.createDataFrame(
+            [(i, text) for i in rows], "doc_id long, text string"
+        )
 
-        assert landed(out) == [(0, 0), (1, 4)]
-        assert landed(rej) == [(0, 1), (1, 5)]
-        assert key not in conf_sets
-    finally:
-        real_set(key, before)
+    # (batch_id, rows): batch 1 is replayed with other rows
+    plan = [(0, range(0, 3)), (1, range(10, 13)), (1, range(20, 23))]
+    barrier = threading.Barrier(2)
+    errors = []
+
+    def run(writer, batch):
+        try:
+            for batch_id, rows in plan:
+                barrier.wait(timeout=300)
+                writer(batch(rows), batch_id)
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+            barrier.abort()
+
+    threads = [
+        threading.Thread(
+            target=run, args=(sinks.idempotent_parquet_writer(ticks_dir), ticks)
+        ),
+        threading.Thread(
+            target=run,
+            args=(curation.c4_gate_writer(docs_dir, min_sentences=3), docs),
+        ),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+
+    want = [(0, i) for i in range(0, 3)] + [(1, i) for i in range(20, 23)]
+    for path, key in ((ticks_dir, "seq"), (docs_dir, "doc_id")):
+        rows = spark.read.parquet(path).collect()
+        assert sorted((r.batch_id, r[key]) for r in rows) == want
+        assert sorted(
+            d for d in os.listdir(path) if d.startswith("batch_id=")
+        ) == ["batch_id=0", "batch_id=1"]
 
 
 def test_streaming_mixture_gate_against_calibrated_rates(spark, tmp_path):
