@@ -36,7 +36,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1937,55 +1937,55 @@ def image_dhash_wide(media: DataFrame, hash_size: int = 16) -> DataFrame:
     )
 
 
-def _words_hamming(a: str | Column, b: str | Column) -> Column:
-    """Hamming distance between two multi-word hashes (array<bigint>):
-    per-word bit_count(xor) summed JVM-side (zip_with + aggregate —
-    whole-stage codegen, no Python in the verify path)."""
-    return F.aggregate(
-        F.zip_with(
-            F.col(a) if isinstance(a, str) else a,
-            F.col(b) if isinstance(b, str) else b,
-            lambda x, y: F.bit_count(x.bitwiseXOR(y)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
+def hash_hamming_sql(a: str, b: str, n_bits: int = 64) -> str:
+    """SQL text of the hamming distance between two ``n_bits``-bit
+    hashes: ``bit_count(a ^ b)`` on a BIGINT, per-word bit_count(xor)
+    summed JVM-side (zip_with + aggregate) on little-endian
+    array<bigint> words — no Python in the verify path."""
+    if n_bits <= 64:
+        return f"bit_count({a} ^ {b})"
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x ^ y)), 0,"
+        " (acc, x) -> acc + x)"
     )
 
 
-def hash_hamming_pairs(
-    hashes: DataFrame,
+def hash_band_structs_sql(
     max_hamming: int,
     hash_col: str = "dhash",
-    id_col: str = "media_id",
     n_bits: int = 64,
     min_band_bits: int = 0,
-) -> DataFrame:
-    """All id pairs whose ``n_bits``-bit hashes differ in at most
-    ``max_hamming`` bits — WITHOUT the all-pairs join: the hash is cut
-    into ``max_hamming + 1`` disjoint bit bands, and by pigeonhole any
-    pair within the hamming budget agrees EXACTLY on at least one band
-    (no false negatives); the band equi-join proposes candidates and
-    ``bit_count(a XOR b)`` verifies exactly. The same band-then-verify
-    shape as the MinHash-LSH dedup, with the sketch replaced by the
-    perceptual hash. Returns (id_a, id_b, hamming), id_a < id_b.
+) -> tuple[str, list[str]]:
+    """The pigeonhole band rows of an ``n_bits``-bit hash, as SQL text:
+    the ``array<struct<band_id, p0, ...>>`` that cuts the hash into
+    ``max_hamming + 1`` disjoint bit bands (explode it with
+    ``inline(...)``), and the band key columns to equi-join on. Any
+    pair within the hamming budget agrees EXACTLY on at least one band,
+    so a join on the keys misses no pair (``hash_hamming_pairs`` and
+    the streaming image dedup writer both band this way).
 
-    SCALE BOUND (r11, the honest form — this replaces the earlier
-    "bands x |distinct|" claim, which was the candidate-GENERATION
-    scan cost, not the join cost): with D distinct hashes roughly
-    uniform over band values, the band equi-join produces about
-    n_bands * D^2 / 2^width candidate pairs — QUADRATIC in D with
-    constant 1/2^width. At n_bits=64 and the budgets this engine
-    plants (8-12), bands are only 5-7 bits wide (32-128 buckets per
-    band): exact and fine at any plausible single-table scale, but a
-    billion-distinct-hash corpus would see ~10^7-row band buckets.
-    The 100 TB path is a WIDER hash at the same budget: pass the hash
-    as array<bigint> (``image_dhash_wide`` / ``audio_fingerprint_wide``,
-    little-endian words) with the matching ``n_bits`` — a 256-bit hash
-    at budget 12 keeps every band >= 19 bits (>= 524288 buckets), and
-    the pigeonhole guarantee is unchanged. ``min_band_bits`` turns
-    that floor into a hard guard: a call whose bands would be narrower
-    raises instead of silently running a small-constant quadratic.
-    """
+    Band bits are non-negative long parts. array<bigint> hashes are
+    LITTLE-ENDIAN (element 1 carries bits 0..63); a band spanning a
+    word boundary emits one masked part per word touched, so the key
+    stays sign-free and >= 64-bit bands never overflow a long. Bands
+    straddle different numbers of word boundaries, so part lists are
+    ZERO-PADDED to the widest band's arity: band_id keeps bands
+    disjoint and padded equality is exactly bitwise band equality.
+
+    SCALE BOUND: with D distinct hashes roughly uniform over band
+    values, the band equi-join produces about n_bands * D^2 / 2^width
+    candidate pairs — QUADRATIC in D with constant 1/2^width. At
+    n_bits=64 and the budgets this engine plants (8-12), bands are only
+    5-7 bits wide (32-128 buckets per band): exact and fine at any
+    plausible single-table scale, but a billion-distinct-hash corpus
+    would see ~10^7-row band buckets. The 100 TB path is a WIDER hash
+    at the same budget: pass the hash as array<bigint>
+    (``image_dhash_wide`` / ``audio_fingerprint_wide``) with the
+    matching ``n_bits`` — a 256-bit hash at budget 12 keeps every band
+    >= 19 bits (>= 524288 buckets), and the pigeonhole guarantee is
+    unchanged. ``min_band_bits`` turns that floor into a hard guard: a
+    call whose bands would be narrower raises instead of silently
+    running a small-constant quadratic."""
     n_bands = max_hamming + 1
     width = n_bits // n_bands
     if min_band_bits and width < min_band_bits:
@@ -1997,43 +1997,26 @@ def hash_hamming_pairs(
             "max_hamming"
         )
     rem = n_bits % n_bands
-    multiword = n_bits > 64
+    h = "`" + hash_col.replace("`", "``") + "`"
 
-    def _parts(off: int, wdt: int) -> list[Column]:
-        """Band bits [off, off+wdt) as a list of non-negative long
-        parts (array<bigint> hashes are LITTLE-ENDIAN: element 0
-        carries bits 0..63; a band spanning a word boundary emits one
-        masked part per word touched, so the equi-join key stays
-        sign-free and >=64-bit bands never overflow a long)."""
-        if not multiword:
-            part = F.shiftrightunsigned(F.col(hash_col), off)
-            if wdt < 64:
-                part = part.bitwiseAND(F.lit((1 << wdt) - 1))
-            return [part]
-        parts: list[Column] = []
-        o, w = off, wdt
-        while w > 0:
-            lo_word, lo_bit = o // 64, o % 64
-            take = min(w, 64 - lo_bit)
-            word = F.element_at(F.col(hash_col), lo_word + 1)
+    def _parts(off: int, wdt: int) -> list[str]:
+        if n_bits <= 64:
+            part = f"shiftrightunsigned({h}, {off})"
+            return [f"({part} & {(1 << wdt) - 1})" if wdt < 64 else part]
+        parts = []
+        while wdt > 0:
+            lo_word, lo_bit = off // 64, off % 64
+            take = min(wdt, 64 - lo_bit)
+            word = f"element_at({h}, {lo_word + 1})"
             if lo_bit:
-                word = F.shiftrightunsigned(word, lo_bit)
+                word = f"shiftrightunsigned({word}, {lo_bit})"
             if take < 64:
-                word = word.bitwiseAND(F.lit((1 << take) - 1))
+                word = f"({word} & {(1 << take) - 1})"
             parts.append(word)
-            o += take
-            w -= take
+            off += take
+            wdt -= take
         return parts
 
-    # r14 (guide §2.4/§3): ONE exploded (id, hash, band_id, parts...)
-    # relation self-joined on (band_id, parts) replaces the r13 form's
-    # n_bands separate self-joins unioned — which replanned the hash
-    # subtree (decode included) 2*n_bands times and ran n_bands joins.
-    # Bands straddle different numbers of word boundaries, so part
-    # lists are ZERO-PADDED to the widest band's arity: band_id keeps
-    # bands disjoint and padded equality is exactly bitwise band
-    # equality, so the candidate set (and the verified output) is
-    # unchanged (the r12 straddling-layout test still pins it).
     band_parts = []
     off = 0
     for i in range(n_bands):
@@ -2041,49 +2024,53 @@ def hash_hamming_pairs(
         band_parts.append(_parts(off, wdt))
         off += wdt
     n_parts = max(len(p) for p in band_parts)
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band_id"),
-                *[
-                    (p[j] if j < len(p) else F.lit(0).cast("long")).alias(
-                        f"p{j}"
-                    )
-                    for j in range(n_parts)
-                ],
-            )
-            for i, p in enumerate(band_parts)
-        ]
+    structs = ", ".join(
+        f"struct({i} AS band_id, "
+        + ", ".join(
+            f"{p[j] if j < len(p) else 'CAST(0 AS BIGINT)'} AS p{j}"
+            for j in range(n_parts)
+        )
+        + ")"
+        for i, p in enumerate(band_parts)
     )
-    h = hashes.select(
-        F.col(id_col), F.col(hash_col), F.explode(structs).alias("__band")
-    ).select(id_col, hash_col, "__band.*")
-    keys = ["band_id"] + [f"p{j}" for j in range(n_parts)]
-    left = h.select(
-        F.col(id_col).alias("id_a"), F.col(hash_col).alias("h_a"), *keys
+    return f"array({structs})", ["band_id", *(f"p{j}" for j in range(n_parts))]
+
+
+def hash_hamming_pairs(
+    hashes: DataFrame,
+    max_hamming: int,
+    hash_col: str = "dhash",
+    id_col: str = "media_id",
+    n_bits: int = 64,
+    min_band_bits: int = 0,
+) -> DataFrame:
+    """All id pairs whose ``n_bits``-bit hashes differ in at most
+    ``max_hamming`` bits — WITHOUT the all-pairs join: the band rows of
+    ``hash_band_structs_sql`` (pigeonhole: a pair within the budget
+    agrees exactly on at least one band, so no false negatives), one
+    self-join on the band keys, then the exact ``hash_hamming_sql``
+    verify. The same band-then-verify shape as the MinHash-LSH dedup,
+    with the sketch replaced by the perceptual hash; see
+    ``hash_band_structs_sql`` for the scale bound and ``min_band_bits``.
+    Returns (id_a, id_b, hamming), id_a < id_b."""
+    bands, keys = hash_band_structs_sql(
+        max_hamming, hash_col, n_bits, min_band_bits
     )
-    right = h.select(
-        F.col(id_col).alias("id_b"), F.col(hash_col).alias("h_b"), *keys
-    )
-    pairs = (
-        left.join(right, keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "h_a", "id_b", "h_b")
-    )
-    hamming = (
-        _words_hamming("h_a", "h_b")
-        if multiword
-        else F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+    h = hashes.selectExpr(
+        f"`{id_col}` AS id", f"`{hash_col}` AS h", f"inline({bands})"
     )
     return (
-        pairs.select("id_a", "id_b", "h_a", "h_b")
+        h.selectExpr("id AS id_a", "h AS h_a", *keys)
+        .join(h.selectExpr("id AS id_b", "h AS h_b", *keys), keys)
+        .filter("id_a < id_b")
+        .select("id_a", "id_b", "h_a", "h_b")
         .distinct()  # a pair can agree on several bands
-        .select(
+        .selectExpr(
             "id_a",
             "id_b",
-            hamming.cast("int").alias("hamming"),
+            f"CAST({hash_hamming_sql('h_a', 'h_b', n_bits)} AS INT) AS hamming",
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(f"hamming <= {max_hamming}")
     )
 
 
@@ -2198,10 +2185,9 @@ def decode_audio_ffmpeg(payload: bytes, ffmpeg: str | None = None) -> dict:
     s16le PCM, then report the SAME stats contract ``decode_audio``
     returns — so a cluster image that ships ffmpeg gets mp3/ogg decode
     through identical downstream plumbing with zero code change. Gated
-    on the binary's presence like the engine's other optional deps
-    (``streaming/stateful.ewma_stream_tws``): NotImplementedError when
-    absent. ``ffmpeg`` is injectable so tests exercise the full
-    subprocess + PCM-stats path here via a stub binary."""
+    on the binary's presence: NotImplementedError when absent.
+    ``ffmpeg`` is injectable so tests exercise the full subprocess +
+    PCM-stats path here via a stub binary."""
     ffmpeg = ffmpeg or _ffmpeg_path()
     if ffmpeg is None:
         raise NotImplementedError(

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import math
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1428,13 +1429,19 @@ def ivf_index_append(
     grown = corpus_delta.join(assign, id_col)
     if codes_books is not None:
         # match the index's existing code representation (the vectors
-        # schema is self-describing); a fresh/empty index gets the
-        # build default, packed binary
+        # schema is self-describing); a missing or data-less vectors
+        # dir is a fresh index and gets the build default, packed
+        # binary. Any other read failure raises: a corrupt index must
+        # not get codes appended in a guessed representation.
         try:
             dt = dict(
                 spark.read.parquet(f"{index_dir}/vectors").dtypes
             ).get("codes", "binary")
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() not in (
+                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
+            ):
+                raise
             dt = "binary"
         grown = grown.join(
             pq_encode(corpus_delta, codes_books, id_col=id_col,

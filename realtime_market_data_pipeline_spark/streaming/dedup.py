@@ -1,72 +1,70 @@
 """Streaming near-duplicate filtering — continuous-ingestion dedup of a
-document stream against a persistent MinHash signature store.
+document, vector or image stream against a persistent store of
+accepted items.
 
-The batch dedup operators (operators/dedup.py) answer "which docs in this
-corpus are near-dups of each other". A training-data ingestion pipeline
-needs the ONLINE form of the same question: as documents stream in, drop
-any that are near-dups of previously ACCEPTED documents (or of lower-id
-docs in the same micro-batch), and remember the survivors' signatures so
-future batches are checked against them. First-accepted-wins — the online
-counterpart of the batch operators' min-id canonicalization.
+The batch dedup operators (operators/dedup.py, similarity.py,
+multimodal.py) answer "which items of this corpus are near-dups of
+each other". An ingestion pipeline needs the ONLINE form: as items
+stream in, drop any that is a near-dup of an ACCEPTED item, and keep
+the survivors in a store that later batches are checked against.
 
-Every writer here lands through ``streaming.sinks.land``, the writers'
-one exactly-once landing contract, and reads its store with
-``batch_id < current`` (the replay guard). Dataflow per micro-batch of
-the MinHash writer:
+**The rule.** The four pairwise writers (MinHash, embedding, SemDeDup,
+image) decide through one helper, ``_dup_ids``. A new row is a dup iff
+it matches, on the writer's candidate keys and verified by the
+writer's own test, either
 
-1. MinHash signatures of the new docs (``minhash_signature`` — one md5 per
-   shingle, codegen'd; docs too short to shingle carry no signature and are
-   accepted unconditionally: an empty shingle set matches nothing).
-2. One banded join. The reference relation is the batch's own
-   signatures (tagged in-batch) unioned with the store of previously
-   accepted docs (``batch_id < current``). Both sides explode into
-   (band_id, band_key) rows that carry their minhashes
-   (``band_structs_sql`` — the band-key format ``band_key_rows`` uses),
-   and ONE equi-join on (band_id, band_key) pairs them. The residual
-   condition keeps store rows and lower-id in-batch rows — dups
-   included, so greedy-by-id — and verifies in the same pass by
-   ESTIMATED Jaccard, the fraction of agreeing minhash components.
-   The new ids it leaves are the batch's dups, one row per matching
-   pair: the landing anti-joins need no distinct, and skipping it
-   saves an exchange. The store
-   keeps 16 longs per accepted doc (never text or shingle sets), so
-   verification costs O(candidates·num_hashes) with a bounded,
-   privacy-friendly store; the estimator is unbiased with stderr ≈
-   √(J(1−J)/16) ≈ 0.1, among pairs that already share a full band.
-   (The batch operators verify with exact shingle-set Jaccard — use
-   them for one-shot corpus dedup where the text is at hand.)
-3. Every expression (the signature aggregates, the band structs, the
-   join condition) is SQL text: built from Column objects, the same
-   trees cost ~7,000 py4j round trips per call against ~600 now, and
-   the single join runs 10-11 Spark jobs per call against 20-23 for the
-   earlier two-leg plan (a band join, a distinct and two verify joins
-   each for history and in-batch, then a union distinct).
-4. Survivors' rows land in ``out_dir/batch_id=N``, their signatures in
-   ``store_dir/batch_id=N`` (``land``), so a replayed batch rewrites
-   itself. The store read filters
-   ``batch_id < current``: a crashed attempt's own partition is invisible
-   to its replay, which would otherwise match every doc against its own
-   half-written signatures and drop the whole batch. A store that
-   cannot be read fails the batch; only a missing or data-less store
-   reads as empty.
+- a store row with ``batch_id < current`` (first accepted wins), or
+- a lower-id row of its own batch, dup or not (greedy-by-id, the
+  online counterpart of the batch operators' min-id canonicalization).
 
-100 TB notes: the join is keyed on (band_id, band_key), so its cost is
-the new batch's band rows plus ONE scan of the whole signature store,
-every batch — the store scan grows with history even though the batch
-does not. The next step is a store laid out by band bucket, so the
-history side reads only the buckets the batch's keys hash to; at real
-scale that is a bucketed table (or Delta/Iceberg with a band-key
-z-order). Spark bucketing needs ``saveAsTable`` into a metastore, whose
-overwrite semantics do not compose with the per-partition
-``batch_id=N`` replay guard these writers rely on — a table-format
-store (Delta/Iceberg MERGE with a transaction log) is the production
-swap, out of scope for a plain-FS engine. What IS real (r11):
-``compact_store`` folds committed batch partitions into one, so the
-store read stops paying one parquet footer per historical batch — the
-maintenance hook every writer here shares. Greedy-by-id within a batch
+One reference relation — the batch's rows tagged ``in_batch`` ∪ the
+store's rows tagged not — is joined once against the batch's rows on
+the candidate keys, with ``(NOT o.in_batch OR o.id < n.id) AND
+<verify>`` as the join condition; the new ids it leaves are the dups,
+one row per matching pair (the landing anti-joins need no distinct).
+Every expression is SQL text: built from Column objects the same trees
+cost thousands of py4j round trips per call.
+
+=========================  ==========================  ================
+writer                     candidate keys              verify
+=========================  ==========================  ================
+``minhash_dedup_writer``   MinHash bands               est. Jaccard
+``embedding_dedup_writer`` sign-LSH (tbl, bucket)      exact cosine
+``semdedup_writer``        frozen-centroid cluster     exact cosine
+``image_dedup_writer``     pigeonhole dHash bands      exact hamming
+=========================  ==========================  ================
+
+**The landing tail** (``_land_survivors``): the dup ids are persisted,
+``batch ⟕anti dups`` lands in ``out_dir/batch_id=N`` and the survivors'
+store rows in ``store_dir/batch_id=N`` through ``streaming.sinks.land``,
+then the dups are unpersisted. A replayed batch rewrites itself, and
+the store read filters ``batch_id < current``: a crashed attempt's own
+half-written rows are invisible to its replay, which would otherwise
+match every row against itself and drop the whole batch. A store that
+cannot be read fails the batch; only a missing or data-less store
+reads as empty. ``decontamination_writer`` and
+``exact_substring_writer`` do not decide by pairs; they land and guard
+replays the same way.
+
+Two edges follow from the rule. A re-sent id that was already accepted
+is a dup of its own stored copy while it still matches it. Greedy-by-id
 can over-drop on chains (A~B~C, A≁C drops both B and C); sequential
-greedy would keep C but needs a per-doc loop — the standard large-scale
-trade (same choice as the batch min-id canonicalization).
+greedy would keep C but needs a per-row loop — the standard
+large-scale trade (the batch min-id canonicalization makes the same
+choice).
+
+100 TB notes: the join's cost is the batch's keyed rows plus ONE scan
+of the whole store, every batch — the store scan grows with history
+even though the batch does not (SemDeDup reads only the clusters the
+batch touches). The next step is a store laid out by candidate key, so
+the history side reads only the keys the batch hashes to; at real
+scale that is a bucketed table (or Delta/Iceberg with a key z-order).
+Spark bucketing needs ``saveAsTable`` into a metastore, whose overwrite
+semantics do not compose with the per-partition ``batch_id=N`` replay
+guard — a table-format store (Delta/Iceberg MERGE with a transaction
+log) is the production swap, out of scope for a plain-FS engine.
+``compact_store`` folds committed batch partitions into one, so the
+store read stops paying one parquet footer per historical batch.
 """
 
 from __future__ import annotations
@@ -242,6 +240,89 @@ def compact_store(
     return files_before, parquet_dir_stats(store_dir)[0]
 
 
+def _quote(col: str) -> str:
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _dup_ids(
+    rows: DataFrame,
+    store: DataFrame | None,
+    id_col: str,
+    keys: list[str],
+    verify: str,
+    explode: str | None = None,
+    broadcast: bool = False,
+) -> DataFrame:
+    """The batch's dup ids under the module's rule, one row per matching
+    pair. ``rows`` are the batch's rows and ``store`` the accepted
+    history (``batch_id < current``) in the same columns. ``explode``
+    is a SQL select item (``inline(...)``) that turns both into keyed
+    rows; without it they carry ``keys`` already. ``verify`` is SQL
+    text over ``n`` (the new row) and ``o`` (the reference row).
+    ``broadcast`` ships the new side — one micro-batch — to every task,
+    so the history streams through the join without an exchange."""
+    key = _quote(id_col)
+    ref = rows.selectExpr("*", "true AS in_batch")
+    if store is not None:
+        ref = ref.unionByName(store.selectExpr("*", "false AS in_batch"))
+    n, o = rows, ref
+    if explode is not None:
+        n, o = rows.selectExpr("*", explode), ref.selectExpr("*", explode)
+    if broadcast:
+        n = F.broadcast(n)
+    match = " AND ".join(
+        [
+            *(f"n.{k} = o.{k}" for k in keys),
+            f"(NOT o.in_batch OR o.{key} < n.{key})",
+            f"({verify})",
+        ]
+    )
+    return n.alias("n").join(o.alias("o"), F.expr(match)).selectExpr(f"n.{key}")
+
+
+def _land_survivors(
+    dups: DataFrame,
+    id_col: str,
+    batch_id: int,
+    batch_df: DataFrame,
+    out_dir: str,
+    stored: DataFrame,
+    store_dir: str,
+    *partition_cols: str,
+) -> None:
+    """The writers' one landing tail: ``batch_df`` and ``stored`` (the
+    rows the store keeps) without the dups land in ``out_dir`` and
+    ``store_dir``. The dups are persisted: both anti-joins read them,
+    and unpersisted each write would re-run the whole decision."""
+    dups = dups.persist()
+    try:
+        land(batch_df.join(dups, id_col, "left_anti"), out_dir, batch_id)
+        land(
+            stored.join(dups, id_col, "left_anti"), store_dir, batch_id,
+            *partition_cols,
+        )
+    finally:
+        dups.unpersist()
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str, *extra: str) -> DataFrame:
+    """(id, ``extra``..., v, nrm): the vector as doubles and its norm,
+    hoisted out of the pair verify (one dot fold per pair instead of
+    three — the same left-to-right folds as ``similarity.cosine``)."""
+    return df.selectExpr(
+        _quote(id_col), *extra,
+        f"transform({_quote(vec_col)}, x -> CAST(x AS DOUBLE)) AS v",
+    ).selectExpr("*", f"sqrt({_dot_sql('v', 'v')}) AS nrm")
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
+def _cosine_at_least(threshold: float) -> str:
+    return f"{_dot_sql('n.v', 'o.v')} / (n.nrm * o.nrm) >= {float(threshold)!r}D"
+
+
 def minhash_dedup_writer(
     store_dir: str,
     out_dir: str,
@@ -252,21 +333,22 @@ def minhash_dedup_writer(
     shingle_k: int = 3,
     threshold: float = 0.7,
 ) -> BatchWriter:
-    """foreachBatch writer: near-dup-filter each micro-batch against the
-    persistent store and append survivors (rows → ``out_dir``, signatures →
-    ``store_dir``, both partitioned by batch_id, dynamic overwrite). A doc
-    is a dup iff it shares a band with, and agrees on ≥ ``threshold`` of
-    the minhashes of, a stored signature of an earlier batch or any lower
-    id of its own batch — one banded join (module docstring, step 2)."""
-    key = "`" + id_col.replace("`", "``") + "`"
+    """foreachBatch writer: near-dup-filter each micro-batch of documents
+    against the persistent store (module rule and landing tail). Keys
+    are the MinHash bands (``band_structs_sql``, the batch operators'
+    band-key format); a candidate is verified by ESTIMATED Jaccard,
+    the fraction of agreeing minhashes, ≥ ``threshold``. The store keeps
+    ``num_hashes`` longs per accepted doc (never text or shingle sets),
+    so verification costs O(candidates·num_hashes) with a bounded,
+    privacy-friendly store; the estimator's stderr is ≈ √(J(1−J)/16) ≈
+    0.1 among pairs that already share a full band (the batch operators
+    verify by exact shingle-set Jaccard). Docs too short to shingle
+    carry no signature and are accepted unconditionally."""
+    key = _quote(id_col)
     mh = [f"mh{i}" for i in range(num_hashes)]
-    bands = f"inline({band_structs_sql(num_hashes, band_size)})"
     agree = " + ".join(f"CAST(n.{c} = o.{c} AS INT)" for c in mh)
-    match = (
-        "n.band_id = o.band_id AND n.band_key = o.band_key"
-        f" AND (NOT o.in_batch OR o.{key} < n.{key})"
-        f" AND ({agree}) / {float(num_hashes)!r}D >= {float(threshold)!r}D"
-    )
+    verify = f"({agree}) / {float(num_hashes)!r}D >= {float(threshold)!r}D"
+    bands = f"inline({band_structs_sql(num_hashes, band_size)})"
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -276,7 +358,6 @@ def minhash_dedup_writer(
             batch_df, text_col, id_col, num_hashes, shingle_k
         ).persist()
         try:
-            ref = sigs.selectExpr("*", "true AS in_batch")
             store = read_store(
                 spark, store_dir, before_batch=batch_id,
                 schema=StructType(
@@ -284,20 +365,13 @@ def minhash_dedup_writer(
                 ),
             )
             if store is not None:
-                ref = ref.unionByName(
-                    store.selectExpr(key, *mh, "false AS in_batch")
-                )
-            dups = (
-                sigs.selectExpr("*", bands).alias("n")
-                .join(ref.selectExpr("*", bands).alias("o"), F.expr(match))
-                .selectExpr(f"n.{key}")
-                .persist()
+                store = store.selectExpr(key, *mh)
+            dups = _dup_ids(
+                sigs, store, id_col, ["band_id", "band_key"], verify, bands
             )
-            try:
-                for rows, path in ((batch_df, out_dir), (sigs, store_dir)):
-                    land(rows.join(dups, id_col, "left_anti"), path, batch_id)
-            finally:
-                dups.unpersist()
+            _land_survivors(
+                dups, id_col, batch_id, batch_df, out_dir, sigs, store_dir
+            )
         finally:
             sigs.unpersist()
 
@@ -318,75 +392,35 @@ def embedding_dedup_writer(
     n_tables: int = 4,
     threshold: float = 0.98,
 ) -> BatchWriter:
-    """foreachBatch writer: the embedding-space sibling of
-    ``minhash_dedup_writer`` (online semantic dedup — SemDeDup-style
-    ingestion filtering). New vectors' sign-LSH buckets
-    (``lsh_bucket_rows``, L tables × r bits, same geometry as the batch
-    ``lsh_bucket_dedup``) join the persistent store of accepted vectors;
-    candidates are verified by EXACT cosine — unlike the minhash filter the
-    store must keep the vectors anyway (it doubles as the retrieval index),
-    so verification is exact and false positives are structurally
-    impossible. In-batch, the lower id wins; across batches, first accepted
-    wins. Store/out partitioning, replay guard and idempotent overwrite are
-    identical to ``minhash_dedup_writer``."""
+    """foreachBatch writer: online semantic dedup of a vector stream
+    (module rule and landing tail). Keys are the sign-LSH buckets
+    (``lsh_bucket_rows``, L tables × r bits, the batch
+    ``lsh_bucket_dedup`` geometry); a candidate is verified by EXACT
+    cosine ≥ ``threshold`` — the store keeps the vectors anyway (it
+    doubles as the retrieval index), so false positives are
+    impossible."""
     from realtime_market_data_pipeline_spark.operators.similarity import (
-        as_double,
-        dot,
         lsh_bucket_rows,
-        norm,
     )
 
-    def _dups(new_v: DataFrame, old_v: DataFrame, in_batch: bool) -> DataFrame:
-        nb = lsh_bucket_rows(new_v, planes, n_tables, id_col, vec_col).select(
-            F.col(id_col).alias("new_id"), "tbl", "bucket"
+    def keyed(vecs: DataFrame) -> DataFrame:
+        return lsh_bucket_rows(vecs, planes, n_tables, id_col, vec_col).join(
+            _normed(vecs, id_col, vec_col), id_col
         )
-        ob = lsh_bucket_rows(old_v, planes, n_tables, id_col, vec_col).select(
-            F.col(id_col).alias("old_id"), "tbl", "bucket"
-        )
-        cand = nb.join(ob, ["tbl", "bucket"]).select("new_id", "old_id")
-        if in_batch:
-            cand = cand.filter(F.col("old_id") < F.col("new_id"))
-        cand = cand.distinct()
-        # per-row norms hoisted out of the pair filter (the r11 semdedup
-        # optimization): one dot + one division per candidate instead of
-        # three array folds — same expression tree, identical results
-        nv = new_v.select(
-            F.col(id_col).alias("new_id"), as_double(vec_col).alias("nv")
-        ).withColumn("nn", norm(F.col("nv")))
-        ov = old_v.select(
-            F.col(id_col).alias("old_id"), as_double(vec_col).alias("ov")
-        ).withColumn("on", norm(F.col("ov")))
-        verified = (
-            cand.join(nv, "new_id")
-            .join(ov, "old_id")
-            .filter(
-                dot(F.col("nv"), F.col("ov")) / (F.col("nn") * F.col("on"))
-                >= F.lit(threshold)
-            )
-        )
-        return verified.select(F.col("new_id").alias(id_col)).distinct()
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         vecs = batch_df.select(id_col, vec_col)
-        dup_hist = None
         store = read_store(spark, store_dir, before_batch=batch_id)
-        if store is not None:
-            dup_hist = _dups(vecs, store.select(id_col, vec_col), in_batch=False)
-        dups = _dups(vecs, vecs, in_batch=True)
-        if dup_hist is not None:
-            dups = dups.unionByName(dup_hist)
-        # r15: persist the (tiny) dropped-id set — both landing writes
-        # anti-join against it, and un-persisted each write re-executed
-        # the whole bucket+verify pipeline (the semdedup_writer
-        # double-execution shape, measured ~2x per batch there)
-        dups = dups.distinct().persist()
-        try:
-            survivors = batch_df.join(dups, id_col, "left_anti")
-            land(survivors, out_dir, batch_id)
-            land(survivors.select(id_col, vec_col), store_dir, batch_id)
-        finally:
-            dups.unpersist()
+        dups = _dup_ids(
+            keyed(vecs),
+            None if store is None else keyed(store.select(id_col, vec_col)),
+            id_col, ["tbl", "bucket"], _cosine_at_least(threshold),
+            broadcast=True,
+        )
+        _land_survivors(
+            dups, id_col, batch_id, batch_df, out_dir, vecs, store_dir
+        )
 
     return write
 
@@ -399,69 +433,29 @@ def semdedup_writer(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> BatchWriter:
-    """Streaming SemDeDup (r11) — the ONLINE form of
-    ``similarity.semdedup``'s k-means path, and the cluster-scoped
-    sibling of ``embedding_dedup_writer``: as vectors stream in, each
-    micro-batch is assigned to the FROZEN centroids of a persisted ANN
-    index (``load_ann_index`` — the artifact the retrieval side
-    already maintains, so the dedup filter and the search index share
-    one codebook), and a new vector is dropped iff some accepted
-    CLUSTER-MATE (or a lower-id cluster-mate in the same batch) is
-    within cosine >= threshold. Candidates join on the cluster id —
-    the SemDeDup bound: Σ bucket² over clusters instead of LSH-band
-    collisions, with the paper's k-scales-with-corpus rule governing
-    the centroid count (see ``similarity.semdedup``). Verification is
-    exact cosine with hoisted per-row norms. The store keeps
-    (id, vector, cluster) per accepted vector, PARTITIONED BY
-    (batch_id, cluster) — the vectors double as the retrieval corpus,
-    and the history read filters to the batch's touched cluster ids
-    (bounded by k, collected like a query batch), so the store SCAN is
-    partition-pruned to the clusters this batch can collide with —
-    the `ann_topk_ivf_indexed` pruned-read pattern applied to the
-    dedup store. Store/out partitioning, replay guard, and idempotent
-    overwrite are the writer-family contract."""
+    """Streaming SemDeDup — the ONLINE form of ``similarity.semdedup``'s
+    k-means path (module rule and landing tail): each micro-batch is
+    assigned to the FROZEN centroids of a persisted ANN index
+    (``load_ann_index`` — the artifact the retrieval side already
+    maintains, so the dedup filter and the search index share one
+    codebook). The key is the cluster id — the SemDeDup bound: Σ
+    bucket² over clusters instead of LSH-band collisions, with the
+    paper's k-scales-with-corpus rule governing the centroid count (see
+    ``similarity.semdedup``); a candidate is verified by exact cosine ≥
+    ``threshold``. The store keeps (id, vector, cluster) per accepted
+    vector, PARTITIONED BY (batch_id, cluster), and the history read
+    filters to the batch's touched cluster ids (bounded by k, collected
+    like a query batch), so the store scan is partition-pruned to the
+    clusters this batch can collide with."""
     from realtime_market_data_pipeline_spark.operators.similarity import (
-        as_double,
-        dot,
         ivf_assign,
         load_ann_index,
-        norm,
     )
 
-    def _with_cluster(df: DataFrame, centers) -> DataFrame:
-        assign = ivf_assign(
-            df, centers, id_col=id_col, vec_col=vec_col, n_probe=1
-        )
-        return df.join(assign, id_col)
-
-    def _dups(new_v: DataFrame, old_v: DataFrame, in_batch: bool) -> DataFrame:
-        a = new_v.select(
-            F.col(id_col).alias("new_id"), "cluster",
-            as_double(vec_col).alias("nv"),
-        ).withColumn("nn", norm(F.col("nv")))
-        b = old_v.select(
-            F.col(id_col).alias("old_id"), "cluster",
-            as_double(vec_col).alias("ov"),
-        ).withColumn("on", norm(F.col("ov")))
-        # broadcast the NEW side (one micro-batch, bounded by the
-        # trigger); the old side is the unbounded accepted history —
-        # broadcasting the batch kills the k-distinct-key shuffle join
-        # (k clusters -> at most k tasks, skew-prone) on both the
-        # in-batch and the history legs (r15, guide §3.1)
-        cand = F.broadcast(a).join(b, "cluster")
-        if in_batch:
-            cand = cand.filter(F.col("old_id") < F.col("new_id"))
-        verified = cand.filter(
-            dot(F.col("nv"), F.col("ov")) / (F.col("nn") * F.col("on"))
-            >= F.lit(threshold)
-        )
-        return verified.select(F.col("new_id").alias(id_col)).distinct()
-
-    # the index is FROZEN by contract (the dedup filter and the search
-    # index share one codebook; re-training rewrites index_dir and a new
-    # writer picks it up) — so load it once per writer instance, lazily
-    # at the first batch, instead of one parquet read + collect per
-    # micro-batch (r15)
+    # the index is FROZEN by contract (re-training rewrites index_dir
+    # and a new writer picks it up) — so load it once per writer
+    # instance, lazily at the first batch, instead of one parquet read
+    # + collect per micro-batch
     frozen: dict = {}
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
@@ -473,43 +467,32 @@ def semdedup_writer(
         centers = frozen["centroids"]
         if not centers:
             raise ValueError(f"no centroids in index at {index_dir}/meta")
-        vecs = _with_cluster(
-            batch_df.select(id_col, vec_col), centers
+        vecs = batch_df.select(id_col, vec_col)
+        vecs = vecs.join(
+            ivf_assign(vecs, centers, id_col=id_col, vec_col=vec_col, n_probe=1),
+            id_col,
         ).persist()
         try:
-            dups = _dups(vecs, vecs, in_batch=True)
             store = read_store(spark, store_dir, before_batch=batch_id)
             if store is not None:
-                # partition-pruned history read: only the clusters this
-                # batch touches can hold a colliding vector (bounded by
-                # k — collected like a query batch)
+                # only the clusters this batch touches can hold a
+                # colliding vector
                 touched = [
                     int(r["cluster"])
                     for r in vecs.select("cluster").distinct().collect()
                 ]
-                dups = dups.unionByName(
-                    _dups(
-                        vecs,
-                        store.filter(F.col("cluster").isin(touched))
-                        .select(id_col, vec_col, "cluster"),
-                        in_batch=False,
-                    )
+                store = _normed(
+                    store.filter(F.col("cluster").isin(touched)),
+                    id_col, vec_col, "cluster",
                 )
-            # r15: persist the (tiny) dropped-id set — BOTH landing
-            # writes anti-join against it, and without the persist each
-            # write re-executed the whole candidate+verify pipeline
-            # (measured: ~2x per-batch write cost)
-            dups = dups.distinct().persist()
-            try:
-                land(batch_df.join(dups, id_col, "left_anti"), out_dir, batch_id)
-                land(
-                    vecs.join(dups, id_col, "left_anti").select(
-                        id_col, vec_col, "cluster"
-                    ),
-                    store_dir, batch_id, "cluster",
-                )
-            finally:
-                dups.unpersist()
+            dups = _dup_ids(
+                _normed(vecs, id_col, vec_col, "cluster"), store, id_col,
+                ["cluster"], _cosine_at_least(threshold), broadcast=True,
+            )
+            _land_survivors(
+                dups, id_col, batch_id, batch_df, out_dir, vecs, store_dir,
+                "cluster",
+            )
         finally:
             vecs.unpersist()
 
@@ -540,8 +523,7 @@ def decontamination_writer(
     - the exact eval-shingle parquet store re-verifies the probable
       hits (blooms have no false negatives, so prefilter+join ≡ plain
       join — the decontamination_bloom contract), and results land in
-      ``out_dir/batch_id=N`` via dynamic-partition overwrite — the
-      ``minhash_dedup_writer`` exactly-once pattern: a replayed batch
+      ``out_dir/batch_id=N`` through ``land``: a replayed batch
       rewrites itself.
 
     Every ingested doc lands with (doc_id, n_shared_ngrams,
@@ -621,12 +603,9 @@ def exact_substring_writer(
     against the persistent digest STORE ((8-byte xxhash64, count) per
     window — never text: bounded, privacy-friendly, the MinHash-store
     rule), span merge (``merge_spans``), spans to
-    ``out_dir/batch_id=N`` and the batch's per-digest counts appended
-    to ``store_dir/batch_id=N`` — both dynamic-partition overwrites,
-    so a replayed batch rewrites itself, and the store read filters
-    ``batch_id < current`` so a crashed attempt's own half-written
-    digests are invisible to its replay (the writer-contract pattern
-    shared by every writer in this module). At 100 TB the store
+    ``out_dir/batch_id=N`` and the batch's per-digest counts to
+    ``store_dir/batch_id=N`` (landed and replay-guarded as the module
+    docstring states). At 100 TB the store
     becomes a bucketed-by-digest table so the per-batch join
     co-locates — and ``compact_store`` folds committed batch
     partitions into one (summing counts), so the store read never
@@ -688,34 +667,23 @@ def image_dedup_writer(
     hash_bits: int = 64,
     min_band_bits: int = 0,
 ) -> BatchWriter:
-    """Streaming perceptual image dedup (late r10) — the online form of
-    the ``multimodal.image_dhash`` + ``hash_hamming_pairs`` pair, and
-    the image-modality member of this module's writer family: as media
-    payloads stream in, drop any whose dHash is within ``max_hamming``
-    bits of a previously ACCEPTED image's hash (or of a lower-id image
-    in the same micro-batch — first-accepted-wins, the MinHash-writer
-    rule). The store keeps ONE hash per accepted image, never pixels —
-    the signature-store privacy/size rule at its extreme.
+    """Streaming perceptual image dedup — the online form of
+    ``multimodal.image_dhash`` + ``hash_hamming_pairs`` (module rule
+    and landing tail): an image is dropped when its dHash is within
+    ``max_hamming`` bits of a reference. Keys are the pigeonhole bands
+    of ``hash_band_structs_sql`` (no false negatives, never all-pairs);
+    a candidate is verified by exact hamming. The store keeps ONE hash
+    per accepted image, never pixels.
 
-    ``hash_bits`` selects the hash form (r11, the band-width fix): 64
-    keeps the single-BIGINT dHash; a multiple of 64 above that (256 =
+    ``hash_bits`` selects the hash form: 64 keeps the single-BIGINT
+    dHash; a square multiple of 64 above that (256 =
     ``image_dhash_wide`` at hash_size 16) stores little-endian
-    array<bigint> words, which keeps the pigeonhole bands wide at real
-    hamming budgets — the 100 TB operating point where a
-    billion-image store would otherwise see the narrow-band quadratic
-    (see the scale bound on ``hash_hamming_pairs``). ``min_band_bits``
-    passes through as the hard guard.
-
-    Per micro-batch: hash the new payloads (shuffle-free Arrow pass),
-    union with the accepted-hash store, pigeonhole-banded candidate
-    join + exact bit_count verify (no false negatives, never
-    all-pairs), survivors' rows to ``out_dir/batch_id=N`` and their
-    hashes to ``store_dir/batch_id=N`` (dynamic overwrite; the store
-    read filters batch_id < current — the replay guard every writer
-    here shares). Greedy-by-id within a batch can over-drop on chains,
-    the same documented trade as the MinHash writer."""
+    array<bigint> words, which keeps the bands wide at real hamming
+    budgets (the scale bound on ``hash_band_structs_sql``).
+    ``min_band_bits`` passes through as the hard guard."""
     from realtime_market_data_pipeline_spark.operators.multimodal import (
-        hash_hamming_pairs,
+        hash_band_structs_sql,
+        hash_hamming_sql,
         image_dhash,
         image_dhash_wide,
     )
@@ -725,67 +693,32 @@ def image_dedup_writer(
     hash_size = int(hash_bits ** 0.5)
     if hash_size * hash_size != hash_bits:
         raise ValueError(f"hash_bits must be a square (dHash grid): {hash_bits}")
+    bands, keys = hash_band_structs_sql(
+        max_hamming, "dhash", hash_bits, min_band_bits
+    )
+    verify = f"{hash_hamming_sql('n.dhash', 'o.dhash', hash_bits)} <= {max_hamming}"
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # persist: the survivors write AND the hash-store write both
-        # consume this lineage — uncached, the payload decode + dHash
-        # pass and the banded candidate join would execute twice per
-        # micro-batch (advice item, r11)
+        # persisted: both join sides and the store landing read the
+        # hashes; uncached, the payload decode + dHash pass re-runs
         if hash_bits == 64:
-            hashes = image_dhash(batch_df).select(id_col, "dhash")
+            hashes = image_dhash(batch_df)
         else:
-            hashes = image_dhash_wide(batch_df, hash_size=hash_size).select(
-                id_col, "dhash"
-            )
-        hashes = hashes.persist()
-        allh = hashes.withColumn("_hist", F.lit(False))
-        store = read_store(spark, store_dir, before_batch=batch_id)
-        if store is not None:
-            allh = allh.unionByName(
-                store.select(id_col, "dhash").withColumn(
-                    "_hist", F.lit(True)
-                )
-            )
-        pairs = hash_hamming_pairs(
-            allh,
-            max_hamming,
-            id_col=id_col,
-            n_bits=hash_bits,
-            min_band_bits=min_band_bits,
-        )
-        flags = allh.select(F.col(id_col), F.col("_hist"))
-        p = pairs.join(
-            flags.select(
-                F.col(id_col).alias("id_a"), F.col("_hist").alias("ha")
-            ),
-            "id_a",
-        ).join(
-            flags.select(
-                F.col(id_col).alias("id_b"), F.col("_hist").alias("hb")
-            ),
-            "id_b",
-        )
-        # history beats batch in either orientation; within the batch
-        # the larger id (id_b) is dropped; history-history pairs are
-        # impossible by induction (the store is already deduped) but
-        # map to NULL and vanish anyway
-        drops = (
-            p.select(
-                F.when(F.col("ha") & ~F.col("hb"), F.col("id_b"))
-                .when(F.col("hb") & ~F.col("ha"), F.col("id_a"))
-                .when(~F.col("ha") & ~F.col("hb"), F.col("id_b"))
-                .alias(id_col)
-            )
-            .filter(F.col(id_col).isNotNull())
-            .distinct()
-            .persist()
-        )
+            hashes = image_dhash_wide(batch_df, hash_size=hash_size)
+        hashes = hashes.select(id_col, "dhash").persist()
         try:
-            for rows, path in ((batch_df, out_dir), (hashes, store_dir)):
-                land(rows.join(drops, id_col, "left_anti"), path, batch_id)
+            store = read_store(spark, store_dir, before_batch=batch_id)
+            if store is not None:
+                store = store.select(id_col, "dhash")
+            dups = _dup_ids(
+                hashes, store, id_col, keys, verify, f"inline({bands})",
+                broadcast=True,
+            )
+            _land_survivors(
+                dups, id_col, batch_id, batch_df, out_dir, hashes, store_dir
+            )
         finally:
-            drops.unpersist()
             hashes.unpersist()
 
     return write

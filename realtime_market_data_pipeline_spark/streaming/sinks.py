@@ -16,9 +16,9 @@ The landing contract every online writer shares (this module's
 ``idempotent_parquet_writer``, the gate writers in streaming/curation.py,
 the dedup writers in streaming/dedup.py, the ANN writers in
 streaming/ann.py) is ``land``: a micro-batch's rows go to
-``<dir>/batch_id=N`` with a per-write dynamic partition overwrite, so a
-replayed batch rewrites only its own partition instead of
-double-inserting — exactly-once landing on top of at-least-once
+``<dir>/batch_id=N`` with a per-write overwrite of that batch's
+partition, so a replayed batch rewrites only its own partition instead
+of double-inserting — exactly-once landing on top of at-least-once
 delivery. The overwrite mode is an option of that one write, never the
 session conf, so streaming queries that share a session cannot flip it
 under each other. At 100 TB the same shape is a Delta/Iceberg MERGE;
@@ -150,16 +150,28 @@ def parquet_append_writer(
 
 def land(df: DataFrame, path: str, batch_id: int, *partition_cols: str) -> None:
     """Write ``df`` to ``path/batch_id=N`` (then ``partition_cols``
-    below it), replacing only the partitions this write produces: a
-    replayed batch rewrites itself and leaves every other batch as it
-    is. The dynamic overwrite is an option of this write; the session
-    conf is never read or set, so writers sharing a session never see
-    each other's overwrite mode."""
+    below it), replacing that batch's rows and leaving every other
+    batch as it is: a replayed batch rewrites itself. Without
+    ``partition_cols`` the write is a dynamic partition overwrite. With
+    them it is a static overwrite of the ``batch_id=N`` subtree: a
+    dynamic one replaces only the partitions the write produces, so a
+    replay whose rows fall in other secondary partitions than the first
+    attempt's would leave the first attempt's behind. The overwrite
+    mode is an option of this write; the session conf is never read or
+    set, so writers sharing a session never see each other's."""
+    if partition_cols:
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy(*partition_cols)
+            .parquet(f"{path.rstrip('/')}/batch_id={batch_id}")
+        )
+        return
     (
         df.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", *partition_cols)
+        .partitionBy("batch_id")
         .parquet(path)
     )
 

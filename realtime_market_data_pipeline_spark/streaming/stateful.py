@@ -137,7 +137,7 @@ def intra_window_vol_stream(
     )
 
 
-# --- transformWithState (Spark 4 arbitrary-state API) ------------------------
+# --- event-time-decayed EWMA -------------------------------------------------
 
 EWMA_OUTPUT_SCHEMA = "symbol string, event_time_ms long, price double, ewma double"
 EWMA_STATE_SCHEMA = "ewma double, last_time_ms long"
@@ -207,77 +207,6 @@ def ewma_stream(
         EWMA_STATE_SCHEMA,
         "update",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def ewma_stream_tws(
-    ticks: DataFrame,
-    half_life: str = "30 seconds",
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """``ewma_stream`` on the Spark 4 arbitrary-state API
-    (``transformWithStateInPandas``: ValueState + optional processing-time
-    state TTL) — the successor to ``applyInPandasWithState`` and the form
-    that composes with timers / multiple typed state variables on a real
-    cluster.
-
-    ENVIRONMENT GATE: the transformWithState Python protocol speaks
-    protobuf to a JVM-side state server (pyspark
-    ``sql/streaming/proto/StateMessage_pb2``); containers without
-    ``google.protobuf`` cannot run it — this build environment is one, so
-    tests exercise the identical ``_ewma_walk`` recursion through
-    ``ewma_stream`` and skip this variant when protobuf is absent."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:  # pragma: no cover - environment-dependent
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf "
-            "(pyspark state-server protocol); use ewma_stream instead"
-        ) from e
-    hl_ms = duration_seconds(normalize_duration(half_life)) * 1000.0
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _EwmaProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState(
-                "ewma", EWMA_STATE_SCHEMA, state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            (symbol,) = key
-            ewma, last_t = (
-                self._state.get() if self._state.exists() else (None, None)
-            )
-            frames = []
-            for pdf in rows:
-                pdf = pdf.sort_values("event_time_ms")
-                prices = pdf["price"].astype(float).tolist()
-                times = pdf["event_time_ms"].astype("int64").tolist()
-                series, ewma, last_t = _ewma_walk(
-                    prices, times, hl_ms, ewma, last_t
-                )
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "symbol": symbol,
-                            "event_time_ms": times,
-                            "price": prices,
-                            "ewma": series,
-                        }
-                    )
-                )
-            if last_t is not None:
-                self._state.update((float(ewma), int(last_t)))
-            yield from iter(frames)
-
-        def close(self) -> None:
-            pass
-
-    return ticks.groupBy("symbol").transformWithStateInPandas(
-        _EwmaProcessor(), EWMA_OUTPUT_SCHEMA, "Update", "None"
     )
 
 

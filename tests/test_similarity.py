@@ -8,8 +8,11 @@ against the underlying operators directly.
 
 from __future__ import annotations
 
+import os
 import random
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from realtime_market_data_pipeline_spark import queries as Q
@@ -551,6 +554,24 @@ def test_ivf_index_append_grows_without_retrain(spark, tmp_path):
     b = sorted(map(tuple, sim.ann_topk_ivfpq(
         spark, ivfpq2, q, k=3, n_probe=4, rerank=50).collect()))
     assert a == b and len(a) > 0
+
+
+def test_ivf_index_append_raises_on_corrupt_vectors(spark, tmp_path):
+    """A vectors dir that cannot be read is not a fresh index: appending
+    PQ codes to it raises instead of guessing the code representation,
+    and nothing is appended."""
+    emb = load_table(spark, SF, "embeddings").filter(F.col("vec_id") < 40)
+    idx = str(tmp_path / "corrupt")
+    centers, books = sim.build_ivfpq_index(
+        emb, idx, n_centroids=4, n_iter=1, n_subspaces=4, k_sub=4
+    )
+    vec = tmp_path / "corrupt" / "vectors"
+    shutil.rmtree(vec)
+    vec.mkdir()
+    (vec / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="parquet|FAILED_READ_FILE|FOOTER"):
+        sim.ivf_index_append(emb, idx, codes_books=books)
+    assert os.listdir(vec) == ["part-0.parquet"]
 
 
 def test_ivf_index_compact_collapses_append_files(spark, tmp_path):

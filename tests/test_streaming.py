@@ -778,7 +778,7 @@ def test_stateful_ewma_matches_batch(spark, gbm_ticks, tick_dir, tmp_path):
     q = (
         out.writeStream.outputMode("update")
         .foreachBatch(lambda df, bid: rows.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
+        .option("checkpointLocation", str(tmp_path / "ckpt_ewma"))
         .trigger(availableNow=True)
         .start()
     )
@@ -800,34 +800,6 @@ def test_stateful_ewma_matches_batch(spark, gbm_ticks, tick_dir, tmp_path):
     }  # reversed → dict keeps the EARLIEST per symbol after full pass
     for sym, (t, p) in firsts.items():
         assert got[(sym, t)] == round(p, 9)
-
-
-def test_tws_variant_gated_on_protobuf(spark):
-    """The transformWithState variant requires google.protobuf (pyspark's
-    state-server protocol). Where absent, it must fail loudly at CALL time
-    with a pointer to ewma_stream — not crash the streaming query later."""
-    from realtime_market_data_pipeline_spark.streaming.stateful import (
-        ewma_stream_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="ewma_stream"):
-            ewma_stream_tws(
-                spark.createDataFrame(
-                    [], "symbol string, price double, event_time_ms long"
-                )
-            )
-    else:  # pragma: no cover - environment-dependent
-        df = ewma_stream_tws(
-            spark.readStream.format("rate").load().selectExpr(
-                "'A' AS symbol",
-                "CAST(value AS DOUBLE) AS price",
-                "unix_millis(timestamp) AS event_time_ms",
-            )
-        )
-        assert df.isStreaming
 
 
 def test_interval_left_outer_join_emits_nulls_after_watermark(spark, tmp_path):
@@ -1027,32 +999,28 @@ def _swap(words: list[str], *edits: tuple[int, str]) -> list[str]:
     return out
 
 
-def _minhash_writer_reference(sigs, batches, threshold):
-    """Pure-Python form of the MinHash writer's rule. ``sigs`` maps id ->
-    16 minhashes (docs too short to shingle have none); ``batches`` is
-    the (batch_id, ids) call sequence, replays included. A doc is a dup
-    iff some reference signature shares a full 4-hash band with it and
-    agrees on >= threshold of its minhashes; the references are the
-    stored signatures of batches < batch_id, and every lower id of the
-    same batch, dup or not. Returns ({batch: accepted ids}, {batch:
-    stored (id, sig)})."""
-    accepted, stored = {}, {}
+def _first_accepted_reference(batches, matches):
+    """Pure-Python form of the pairwise writers' rule: ``batches`` is the
+    (batch_id, ids) call sequence, replays included, and ``matches(i,
+    j)`` says whether new row i is a near-dup of reference row j (same
+    candidate key and verified). A row is a dup iff it matches a stored
+    row of a batch < batch_id, or a lower id of its own batch, dup or
+    not. Returns {batch: accepted ids}."""
+    accepted = {}
     for b, ids in batches:
-        hist = [r for sb, rows in stored.items() if sb < b for r in rows]
-        keep = []
-        for i in ids:
-            s = sigs.get(i)
-            refs = hist + [(j, sigs[j]) for j in ids if j < i and j in sigs]
-            if s is not None and any(
-                any(s[k:k + 4] == t[k:k + 4] for k in range(0, 16, 4))
-                and sum(x == y for x, y in zip(s, t)) / 16.0 >= threshold
-                for _, t in refs
-            ):
-                continue
-            keep.append(i)
-        accepted[b] = set(keep)
-        stored[b] = [(i, sigs[i]) for i in keep if i in sigs]
-    return accepted, stored
+        hist = [j for sb, acc in accepted.items() if sb < b for j in acc]
+        accepted[b] = {
+            i for i in ids
+            if not any(matches(i, j) for j in hist + [j for j in ids if j < i])
+        }
+    return accepted
+
+
+def _landed_ids(spark, path, id_col):
+    got = {}
+    for r in spark.read.parquet(path).select("batch_id", id_col).collect():
+        got.setdefault(r.batch_id, []).append(r[id_col])
+    return {b: sorted(ids) for b, ids in got.items()}
 
 
 def test_minhash_dedup_writer_matches_python_reference(spark, tmp_path):
@@ -1096,30 +1064,35 @@ def test_minhash_dedup_writer_matches_python_reference(spark, tmp_path):
             spark.createDataFrame(list(texts.items()), schema)
         ).collect()
     }
-    want_acc, want_store = _minhash_writer_reference(
-        sigs, [(bid, list(ids)) for bid, ids in calls], th
-    )
 
     def est(i, j):
         return sum(x == y for x, y in zip(sigs[i], sigs[j])) / 16.0
 
+    def matches(i, j):  # a shared full 4-hash band, then est >= th
+        return (
+            i in sigs and j in sigs
+            and any(
+                sigs[i][k:k + 4] == sigs[j][k:k + 4] for k in range(0, 16, 4)
+            )
+            and est(i, j) >= th
+        )
+
     # the chain the data is built to exercise
     assert est(1, 2) >= th and est(2, 3) >= th and est(1, 3) < th
     assert 8 not in sigs and 15 not in sigs
-    assert want_acc == {
-        0: {1, 4, 6, 8, 9}, 1: {12, 15}, 2: {16, 17},
+    want = _first_accepted_reference(
+        [(bid, list(ids)) for bid, ids in calls], matches
+    )
+    assert want == {0: {1, 4, 6, 8, 9}, 1: {12, 15}, 2: {16, 17}}
+    assert _landed_ids(spark, out, "doc_id") == {
+        b: sorted(ids) for b, ids in want.items()
     }
-
-    got_acc = {}
-    for r in spark.read.parquet(out).select("batch_id", "doc_id").collect():
-        got_acc.setdefault(r.batch_id, set()).add(r.doc_id)
-    assert got_acc == want_acc
     got_store = sorted(
         (r.batch_id, r.doc_id, tuple(r[c] for c in mh))
         for r in spark.read.parquet(store).collect()
     )
     assert got_store == sorted(
-        (bid, i, s) for bid, rows in want_store.items() for i, s in rows
+        (b, i, sigs[i]) for b, ids in want.items() for i in ids if i in sigs
     )
 
 
@@ -1185,6 +1158,216 @@ def test_minhash_dedup_writer_raises_on_corrupt_store(spark, tmp_path):
         "batch_id=0"
     ]
     assert not os.path.exists(os.path.join(store, "batch_id=1"))
+
+
+def test_embedding_dedup_writer_matches_python_reference(spark, tmp_path):
+    """Decision parity for the embedding writer: three batches and a
+    replay land exactly the ids the pure-Python rule picks from the
+    same LSH buckets and the same left-to-right cosine folds — exact
+    and near copies in-batch and across batches, an A~B~C chain with
+    A≁C (greedy-by-id drops B and C), and a re-sent id that was already
+    accepted (a dup of its own stored copy)."""
+    import math
+
+    from realtime_market_data_pipeline_spark.operators.similarity import (
+        lsh_bucket_rows,
+    )
+    from realtime_market_data_pipeline_spark.streaming import dedup as sdedup
+
+    th, dim, n_tables = 0.98, 8, 4
+    rng = random.Random(5)
+    planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(16)]
+
+    def unit():
+        v = [rng.gauss(0, 1) for _ in range(dim)]
+        n = math.sqrt(sum(x * x for x in v))
+        return [x / n for x in v]
+
+    def near(v, eps=0.01):
+        return [x + rng.gauss(0, eps) for x in v]
+
+    u = unit()
+    w0 = unit()
+    d = sum(x * y for x, y in zip(u, w0))
+    w = [y - d * x for x, y in zip(u, w0)]
+    n = math.sqrt(sum(x * x for x in w))
+    w = [x / n for x in w]
+
+    def arc(t):  # unit vector at angle t from u towards w
+        return [math.cos(t) * x + math.sin(t) * y for x, y in zip(u, w)]
+
+    step = math.acos(0.985)
+    base = {k: unit() for k in range(6)}
+    vecs = {
+        1: arc(0), 2: arc(step), 3: arc(2 * step), 4: base[0],
+        5: list(base[0]), 6: base[1], 7: near(base[1]), 8: base[2],
+        9: near(base[0]), 10: base[3], 11: list(base[3]), 12: near(base[2]),
+        13: base[4], 14: list(arc(step)),
+        15: base[5], 16: near(base[5]), 17: list(base[4]), 18: near(base[3]),
+    }
+    calls = [(0, [1, 2, 3, 4, 5, 6, 7, 8]), (1, [9, 10, 11, 12, 13, 14]),
+             (2, [15, 16, 17, 18, 1])]
+    calls.append(calls[-1])  # replay of the last batch
+    schema = "vec_id long, embedding array<double>"
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    writer = sdedup.embedding_dedup_writer(
+        store, out, planes, n_tables=n_tables, threshold=th
+    )
+    for bid, ids in calls:
+        writer(spark.createDataFrame([(i, vecs[i]) for i in ids], schema), bid)
+
+    buckets = {}
+    for r in lsh_bucket_rows(
+        spark.createDataFrame(list(vecs.items()), schema), planes, n_tables
+    ).collect():
+        buckets.setdefault(r.vec_id, {})[r.tbl] = r.bucket
+
+    def dot(a, b):  # the writer's left-to-right fold
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def cos(i, j):
+        a, b = vecs[i], vecs[j]
+        return dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+
+    def matches(i, j):
+        return (
+            any(buckets[i][t] == buckets[j][t] for t in range(n_tables))
+            and cos(i, j) >= th
+        )
+
+    # the chain the data is built to exercise
+    assert matches(2, 1) and matches(3, 2) and not matches(3, 1)
+    want = _first_accepted_reference(calls, matches)
+    assert want == {0: {1, 4, 6, 8}, 1: {10, 13}, 2: {15}}
+    want = {b: sorted(ids) for b, ids in want.items()}
+    assert _landed_ids(spark, out, "vec_id") == want
+    assert _landed_ids(spark, store, "vec_id") == want
+
+
+def _dhash_bmp(bits):
+    """A 9x8 grayscale BMP whose dHash is ``bits`` (64 booleans,
+    row-major): each row climbs for a 1 and falls for a 0."""
+    import numpy as np
+
+    from realtime_market_data_pipeline_spark.operators import (
+        multimodal as mm,
+    )
+
+    v = np.zeros((8, 9), dtype=np.int64)
+    v[:, 0] = 100
+    for y in range(8):
+        for x in range(8):
+            v[y, x + 1] = v[y, x] + (10 if bits[8 * y + x] else -10)
+    return mm.encode_bmp_pixels(
+        np.repeat(v.astype(np.uint8)[:, :, None], 3, axis=2)
+    )
+
+
+def test_image_dedup_writer_matches_python_reference(spark, tmp_path):
+    """Decision parity for the image writer: three batches and a replay
+    land exactly the ids the pure-Python rule picks from the same
+    dHashes (exact hamming <= budget; the pigeonhole bands miss no such
+    pair) — exact and near copies in-batch and across batches, an
+    A~B~C chain with A≁C (greedy-by-id drops B and C), and a re-sent
+    id that was already accepted, which is a dup of its own stored
+    copy."""
+    from realtime_market_data_pipeline_spark.operators import (
+        multimodal as mm,
+    )
+    from realtime_market_data_pipeline_spark.streaming import dedup as sdedup
+
+    budget = 8
+    rng = random.Random(3)
+    base = {k: [rng.random() < 0.5 for _ in range(64)] for k in range(6)}
+
+    def flip(bits, *pos):
+        return [b != (i in pos) for i, b in enumerate(bits)]
+
+    a = base[0]
+    b = flip(a, *range(6))
+    c = flip(b, *range(6, 12))
+    pats = {
+        1: a, 2: b, 3: c, 4: base[1], 5: base[1], 6: base[2],
+        7: flip(base[2], 3, 17, 40), 8: base[3],
+        9: flip(base[1], 60), 10: base[4], 11: base[4],
+        12: flip(base[3], *range(20, 28)), 13: base[5], 14: b,
+        15: flip(base[5], *range(30, 39)), 16: flip(base[4], 1, 2),
+    }
+    calls = [(0, [1, 2, 3, 4, 5, 6, 7, 8]), (1, [9, 10, 11, 12, 13, 14]),
+             (2, [15, 16, 1])]
+    calls.append(calls[-1])  # replay of the last batch
+    schema = "media_id long, payload binary, media_type string"
+
+    def media(ids):
+        return spark.createDataFrame(
+            [(i, bytearray(_dhash_bmp(pats[i])), "image/bmp") for i in ids],
+            schema,
+        )
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    writer = sdedup.image_dedup_writer(store, out, max_hamming=budget)
+    for bid, ids in calls:
+        writer(media(ids), bid)
+
+    h = {
+        r.media_id: r.dhash
+        for r in mm.image_dhash(media(sorted(pats))).collect()
+    }
+
+    def hamming(i, j):
+        return bin((h[i] ^ h[j]) & (2**64 - 1)).count("1")
+
+    def matches(i, j):
+        return hamming(i, j) <= budget
+
+    assert hamming(1, 2) == 6 and hamming(2, 3) == 6 and hamming(1, 3) == 12
+    assert hamming(15, 13) == 9  # one bit past the budget
+    want = _first_accepted_reference(calls, matches)
+    assert want == {0: {1, 4, 6, 8}, 1: {10, 13}, 2: {15}}
+    want = {b: sorted(ids) for b, ids in want.items()}
+    assert _landed_ids(spark, out, "media_id") == want
+    assert _landed_ids(spark, store, "media_id") == want
+
+
+def test_semdedup_replay_under_retrained_index_replaces_batch(spark, tmp_path):
+    """A replay under a re-trained index assigns the batch's rows to
+    other clusters than the first attempt did. The store must then hold
+    only the replay's rows for that batch: no cluster subtree of the
+    first attempt may survive as accepted history."""
+    from realtime_market_data_pipeline_spark.operators import (
+        similarity as sim,
+    )
+    from realtime_market_data_pipeline_spark.streaming import dedup as sdedup
+
+    eye = [[float(i == j) for j in range(4)] for i in range(4)]
+    first, retrained = str(tmp_path / "idx1"), str(tmp_path / "idx2")
+    sim.save_ann_index(spark, f"{first}/meta", centroids=eye)
+    sim.save_ann_index(
+        spark, f"{retrained}/meta", centroids=[[-1.0] * 4, [1.0] * 4]
+    )
+    schema = "vec_id long, embedding array<double>"
+    b0 = spark.createDataFrame([(0, [1.0, 0.0, 0.0, 0.1])], schema)
+    b1 = spark.createDataFrame(
+        [(1, [0.0, 0.0, 1.0, 0.1]), (2, [0.0, 0.3, 0.0, 1.0]),
+         (3, [0.2, 1.0, 0.0, 0.0])],
+        schema,
+    )
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    sdedup.semdedup_writer(first, store, out)(b0, 0)
+    sdedup.semdedup_writer(first, store, out)(b1, 1)
+    assert {
+        r.cluster for r in spark.read.parquet(store).collect()
+    } == {0, 1, 2, 3}
+    sdedup.semdedup_writer(retrained, store, out)(b1, 1)  # the replay
+    st = spark.read.parquet(store).filter("batch_id = 1").collect()
+    assert sorted((r.vec_id, r.cluster) for r in st) == [(1, 1), (2, 1), (3, 1)]
+    assert _landed_ids(spark, out, "vec_id") == {0: [0], 1: [1, 2, 3]}
+    # an empty batch lands under the same layout and reads back
+    sdedup.semdedup_writer(retrained, store, out)(b1.limit(0), 2)
+    assert spark.read.parquet(store).count() == 4
 
 
 def test_streaming_embedding_dedup_across_batches(spark, tmp_path):
